@@ -49,32 +49,32 @@ def decode_records(
     return records.select(*cols).select("msg.*", *(["seq"] if "seq" in records.columns else []))
 
 
-def apply_consumer_batch(
-    table: KeyedParquetTable,
-    batch: DataFrame,
-    spec: ConsumerSpec,
-    doc_schema: T.StructType,
-) -> dict:
-    """One micro-batch: decode -> classify -> merge. The body of
-    foreachBatch; also usable directly for batch backfills.
-
-    Partial-failure contract (route81.go:1100-1116): a message whose
-    document id cannot be extracted is counted as failed and skipped;
-    the rest of the batch still applies. Returns {'success': n,
-    'failed': n} for stats accounting."""
-    decoded = decode_records(batch, spec, doc_schema)
-    classified = classify(
-        decoded,
+def decode_classify(
+    records: DataFrame, spec: ConsumerSpec, doc_schema: T.StructType
+) -> DataFrame:
+    """Kafka records -> classified change rows (is_delete, doc_id, doc,
+    plus `seq` when the records carry one). Pure plan construction: the
+    streaming consumer builds it once per stream, not once per batch."""
+    return classify(
+        decode_records(records, spec, doc_schema),
         ClassifierConfig(
             document_root_path=spec.document_root_path,
             delete_id_path=spec.delete_id_path,
         ),
         keep=["seq"],
     )
+
+
+def merge_classified(table: KeyedParquetTable, classified: DataFrame) -> dict:
+    """Count and merge one batch of classified change rows.
+
+    Partial-failure contract (route81.go:1100-1116): a message whose
+    document id cannot be extracted is counted as failed and skipped;
+    the rest of the batch still applies. Returns {'success': n,
+    'failed': n} for stats accounting."""
     # persist so the source is scanned ONCE per micro-batch: the stats
-    # count and the merge below share this materialization (previously
-    # the collect() executed decode+classify, then merge re-ran the
-    # whole unpersisted plan a second time)
+    # count and the merge below share this materialization instead of
+    # each re-running decode+classify
     classified = classified.persist()
     try:
         counts = classified.select(
@@ -86,6 +86,38 @@ def apply_consumer_batch(
     finally:
         classified.unpersist()
     return {"success": int(counts["total"] - counts["failed"]), "failed": int(counts["failed"])}
+
+
+def apply_consumer_batch(
+    table: KeyedParquetTable,
+    batch: DataFrame,
+    spec: ConsumerSpec,
+    doc_schema: T.StructType,
+) -> dict:
+    """One batch of kafka records: decode -> classify -> merge, for batch
+    backfills. The streaming consumer runs the same two halves, with
+    decode_classify planned once on the stream."""
+    return merge_classified(table, decode_classify(batch, spec, doc_schema))
+
+
+def oplog_seq(value_col: Column) -> Column:
+    """Per-key ordering key from an ext-JSON envelope's oplog timestamp
+    (meta.ts.$timestamp {t, i}): t * 2^32 + i. MongoDB's increment `i`
+    is a uint32, so this keeps (t, i) order and fits a long for every
+    t below 2^31 (Unix seconds up to 2038)."""
+    ts_type = T.StructType([T.StructField("t", T.LongType()), T.StructField("i", T.LongType())])
+    seq_schema = T.StructType(
+        [
+            T.StructField(
+                "meta",
+                T.StructType(
+                    [T.StructField("ts", T.StructType([T.StructField("$timestamp", ts_type)]))]
+                ),
+            )
+        ]
+    )
+    ts = F.from_json(value_col.cast("string"), seq_schema)["meta"]["ts"]["$timestamp"]
+    return ts.getField("t") * F.lit(1 << 32) + ts.getField("i")
 
 
 def topic_source(
@@ -146,16 +178,21 @@ def consumer_job(
     """Streaming consumer: foreachBatch keyed merge with the reference's
     flush cadence as the trigger interval. Pass a dict as `stats` to
     accumulate the consumer success/failed counters
-    (route81.go:497-505)."""
+    (route81.go:497-505).
+
+    decode -> classify is applied to the stream itself, so it is planned
+    once per stream (Structured Streaming re-runs the plan per trigger);
+    each micro-batch only counts and merges."""
 
     def on_batch(batch: DataFrame, batch_id: int) -> None:
-        result = apply_consumer_batch(table, batch, spec, doc_schema)
+        result = merge_classified(table, batch)
         if stats is not None:
             stats["success"] = stats.get("success", 0) + result["success"]
             stats["failed"] = stats.get("failed", 0) + result["failed"]
 
     return (
-        record_stream.writeStream.foreachBatch(on_batch)
+        decode_classify(record_stream, spec, doc_schema)
+        .writeStream.foreachBatch(on_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{spec.bulk_flush_seconds} seconds")
         .start()

@@ -127,12 +127,9 @@ def run_consumers(spark, cfg: Config, args) -> list:
     """Wire each [[consumer]] block: kafka-shaped records (parquet topic
     dirs, or Kafka when --kafka-bootstrap) -> decode -> classify ->
     keyed merge into --tables-out/<ns> (route81 consumer path §3.3)."""
-    import json as _json
-
     from pyspark.sql import functions as F
 
-    from route81_spark.jobs.consumer import consumer_job, consumer_sink
-    from route81_spark.sinks.merge import KeyedParquetTable
+    from route81_spark.jobs.consumer import consumer_job, consumer_sink, oplog_seq
 
     queries = []
     for spec in cfg.consumers:
@@ -182,39 +179,7 @@ def run_consumers(spark, cfg: Config, args) -> list:
             stream = spark.readStream.schema(first.schema).parquet(topic_dir)
             # per-key ordering from the envelope's oplog timestamp
             # (kafka mode uses the record offset instead)
-            from pyspark.sql import types as T
-
-            seq_schema = T.StructType(
-                [
-                    T.StructField(
-                        "meta",
-                        T.StructType(
-                            [
-                                T.StructField(
-                                    "ts",
-                                    T.StructType(
-                                        [
-                                            T.StructField(
-                                                "$timestamp",
-                                                T.StructType(
-                                                    [
-                                                        T.StructField("t", T.LongType()),
-                                                        T.StructField("i", T.LongType()),
-                                                    ]
-                                                ),
-                                            )
-                                        ]
-                                    ),
-                                )
-                            ]
-                        ),
-                    )
-                ]
-            )
-            ts = F.from_json(F.col("value").cast("string"), seq_schema)["meta"]["ts"]["$timestamp"]
-            stream = stream.withColumn(
-                "seq", ts.getField("t") * F.lit(10_000_000_000) + ts.getField("i")
-            )
+            stream = stream.withColumn("seq", oplog_seq(F.col("value")))
         q = consumer_job(
             spark, spec, stream, table, doc_schema,
             ckpt_dir(cfg, args.checkpoint_dir or args.tables_out, f"_ckpt_{spec.mongo_namespace}"),

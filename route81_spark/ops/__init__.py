@@ -12,4 +12,3 @@ changes per-row CPU, not the shuffle structure.
 """
 
 from route81_spark.ops import dedup, layout, similarity, temporal, text  # noqa: F401
-from route81_spark.ops import stages  # noqa: F401  (registers $dedupExact etc.)

@@ -1360,10 +1360,12 @@ def compile_stage(stage: dict, sort_spec: dict | None = None) -> Callable[[DataF
         raise PipelineCompileError(f"each pipeline stage must be a single-key document: {stage}")
     name, arg = next(iter(stage.items()))
     if name not in _KNOWN_STAGES and name not in EXTRA_STAGES:
-        # extension stages register on route81_spark.ops import; load it
-        # before declaring the stage unknown so pipeline JSON works from
-        # any entry point (e.g. python -m route81_spark.main)
-        import route81_spark.ops  # noqa: F401
+        # extension stages register when route81_spark.ops.stages is
+        # imported; load it before declaring the stage unknown so
+        # pipeline JSON works from any entry point (e.g. python -m
+        # route81_spark.main). It is imported here, not from
+        # route81_spark.ops, because it imports this module.
+        import route81_spark.ops.stages  # noqa: F401
 
         if name not in EXTRA_STAGES:
             # fail at config time, mirroring route81's hard pipeline-JSON

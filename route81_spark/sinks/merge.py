@@ -23,6 +23,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def latest_per_key(changes: DataFrame, key: str = "doc_id", seq: str = "seq") -> DataFrame:
@@ -91,11 +92,15 @@ def apply_changes(
     allowMissingColumns — documents that add fields widen the table
     and old rows read null there; documents that drop fields store
     null, exactly the BSON-absent reading.
+
+    The anti-join keys come from `changes` itself, not from its
+    per-key latest rows: the key set is the same, and the broadcast side
+    then does not wait on the latest_per_key shuffle.
     """
+    changed_keys = changes.select(F.col(key))
     if seq is not None and seq in changes.columns:
         changes = latest_per_key(changes, key=key, seq=seq)
     upserts = changes.filter(~F.col("is_delete")).select("doc.*")
-    changed_keys = changes.select(F.col(key))
     kept = target.join(changed_keys, target[target_key] == changed_keys[key], "left_anti")
     return kept.unionByName(upserts, allowMissingColumns=True)
 
@@ -110,13 +115,19 @@ class KeyedParquetTable:
     ONLY the buckets that contain changed keys — the same file-pruning
     property a Delta MERGE gets from data skipping. A CDC batch touching
     0.1% of keys rewrites ~0.1% of buckets instead of the whole table,
-    which is what makes a keyed sink viable at 100 TB."""
+    which is what makes a keyed sink viable at 100 TB.
+
+    The table carries the schema of the files it last wrote (`init` and
+    every `merge` record it), so reads pass it to the reader and run no
+    schema-inference job; an object opened over an existing path infers
+    it once, on its first read."""
 
     def __init__(self, spark: SparkSession, path: str, key: str = "_id", buckets: int = 0):
         self.spark = spark
         self.path = path
         self.key = key
         self.buckets = buckets
+        self._schema: T.StructType | None = None
 
     @property
     def _current(self) -> str:
@@ -125,24 +136,34 @@ class KeyedParquetTable:
     def exists(self) -> bool:
         return os.path.isdir(self._current)
 
+    def _scan(self) -> DataFrame:
+        """The files under current/ as written (with the `bucket`
+        partition column when bucketed)."""
+        if self._schema is None:
+            self._schema = self.spark.read.parquet(self._current).schema
+        return self.spark.read.schema(self._schema).parquet(self._current)
+
     def read(self) -> DataFrame:
-        df = self.spark.read.parquet(self._current)
+        df = self._scan()
         return df.drop("bucket") if self.buckets else df
 
     def _bucket_of(self, col) -> "F.Column":
         return F.pmod(F.xxhash64(col.cast("string")), F.lit(self.buckets)).cast("int")
 
+    def _write(self, df: DataFrame, path: str) -> None:
+        """Overwrite `path` with df and record df's schema as the
+        table's."""
+        writer = df.write.mode("overwrite")
+        if self.buckets:
+            writer = writer.partitionBy("bucket")
+        writer.parquet(path)
+        self._schema = df.schema
+
     def init(self, df: DataFrame) -> None:
         os.makedirs(self.path, exist_ok=True)
         if self.buckets:
-            (
-                df.withColumn("bucket", self._bucket_of(F.col(self.key)))
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(self._current)
-            )
-        else:
-            df.write.mode("overwrite").parquet(self._current)
+            df = df.withColumn("bucket", self._bucket_of(F.col(self.key)))
+        self._write(df, self._current)
 
     def merge(self, changes: DataFrame, seq: str | None = "seq") -> None:
         """changes: doc_id, is_delete, doc struct (+ optional seq)."""
@@ -151,7 +172,7 @@ class KeyedParquetTable:
             return
         new_state = apply_changes(self.read(), changes, seq=seq, target_key=self.key)
         tmp = os.path.join(self.path, "next")
-        new_state.write.mode("overwrite").parquet(tmp)
+        self._write(new_state, tmp)
         old = self._current
         swap = os.path.join(self.path, "prev")
         if os.path.isdir(swap):
@@ -168,9 +189,7 @@ class KeyedParquetTable:
         touched = [r["bucket"] for r in changes.select("bucket").distinct().collect()]
         if not touched:
             return
-        current = self.spark.read.parquet(self._current).filter(
-            F.col("bucket").isin(touched)
-        )
+        current = self._scan().filter(F.col("bucket").isin(touched))
         new_state = apply_changes(
             current.drop("bucket"), changes.drop("bucket"), seq=seq, target_key=self.key
         )
@@ -181,7 +200,7 @@ class KeyedParquetTable:
         tmp = os.path.join(self.path, "next")
         if os.path.isdir(tmp):
             shutil.rmtree(tmp)
-        out.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+        self._write(out, tmp)
         for b in touched:
             cur_b = os.path.join(self._current, f"bucket={b}")
             new_b = os.path.join(tmp, f"bucket={b}")

@@ -309,3 +309,94 @@ def test_run_pipeline_cli_errors(tmp_path):
     with pytest.raises(SystemExit, match="JSON array"):
         rp_main(["--pipeline", str(bad), "--source", "docs",
                  "--tables", "docs=/tmp/x.parquet"])
+
+
+def _ext_record(key: str, t: int, i: int, x: int | None) -> bytes:
+    """One ext-JSON consumer message for key; x=None is an id-only
+    delete. The oplog timestamp is (t, i)."""
+    data = {"_id": key} if x is None else {"_id": key, "x": {"$numberInt": str(x)}}
+    return json.dumps(
+        {"meta": {"ts": {"$timestamp": {"t": t, "i": i}}, "ns": "db.c"}, "data": data}
+    ).encode()
+
+
+def _doc_schema():
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [T.StructField("_id", T.StringType()), T.StructField("x", T.IntegerType())]
+    )
+
+
+def test_consumer_batch_real_oplog_seq(spark, tmp_path):
+    """Real oplog seconds (Unix time) fit the consumer seq, and per-key
+    last-writer-wins follows (t, i): a later second beats a larger
+    increment, and within a second the larger increment wins."""
+    from route81_spark.config import ConsumerSpec
+    from route81_spark.jobs.consumer import oplog_seq
+
+    t = 1_700_000_000
+    values = [
+        _ext_record("a", t + 1, 0, 3),  # latest for a: later second
+        _ext_record("a", t, 7, 2),
+        _ext_record("a", t, 6, 1),
+        _ext_record("b", t, 2, 20),     # latest for b: larger increment
+        _ext_record("b", t, 1, 10),
+        _ext_record("c", t, 5, 5),
+        _ext_record("c", t, 9, None),   # c deleted last
+    ]
+    batch = spark.createDataFrame([(v,) for v in values], "value binary").withColumn(
+        "seq", oplog_seq(F.col("value"))
+    )
+    doc_schema = _doc_schema()
+    table = KeyedParquetTable(spark, str(tmp_path / "t"))
+    table.init(spark.createDataFrame([], doc_schema))
+    spec = ConsumerSpec(kafka_topics=["t"], mongo_namespace="db.c", document_root_path="data")
+    assert apply_consumer_batch(table, batch, spec, doc_schema) == {"success": 7, "failed": 0}
+    assert sorted(tuple(r) for r in table.read().collect()) == [("a", 3), ("b", 20)]
+
+
+def test_consumer_stream_jobs_per_batch(spark, tmp_path):
+    """A steady-state consumer micro-batch runs at most 6 Spark jobs:
+    decode/classify is planned on the stream, the keyed table reads with
+    its recorded schema (no inference job), and the anti-join keys do
+    not wait on the per-key shuffle. Counted per batch via statusTracker
+    over the stream's runId job group."""
+    from route81_spark.config import ConsumerSpec
+    from route81_spark.jobs.consumer import consumer_job
+
+    doc_schema = _doc_schema()
+    table = KeyedParquetTable(spark, str(tmp_path / "t"))
+    table.init(spark.createDataFrame([(f"k{j}", j) for j in range(50)], doc_schema))
+    topic = tmp_path / "topic"
+    topic.mkdir()
+    record_schema = "value binary, seq long"
+    spec = ConsumerSpec(
+        kafka_topics=["t"], mongo_namespace="db.c", document_root_path="data",
+        bulk_flush_seconds=0,
+    )
+    stats: dict = {}
+    stream = spark.readStream.schema(record_schema).parquet(str(topic))
+    cq = consumer_job(spark, spec, stream, table, doc_schema, str(tmp_path / "ckpt"), stats=stats)
+    tracker = spark.sparkContext.statusTracker()
+    group = str(cq.runId)
+    jobs = []
+    try:
+        for step in range(4):
+            rows = [
+                (_ext_record(f"k{step * 10 + j}", step + 1, j, 100 + step), step * 100 + j)
+                for j in range(10)
+            ]
+            spark.createDataFrame(rows, record_schema).coalesce(1).write.mode("append").parquet(
+                str(topic)
+            )
+            before = set(tracker.getJobIdsForGroup(group))
+            cq.processAllAvailable()
+            jobs.append(len(set(tracker.getJobIdsForGroup(group)) - before))
+    finally:
+        cq.stop()
+    assert stats == {"success": 40, "failed": 0}
+    got = dict(tuple(r) for r in table.read().collect())
+    assert len(got) == 50 and got["k39"] == 103 and got["k40"] == 40
+    # the first batch also plans the stream; later batches are steady state
+    assert max(jobs[1:]) <= 6, jobs

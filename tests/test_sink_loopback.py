@@ -247,6 +247,56 @@ def test_scd2_history_versions_and_reinsert(spark):
     assert final.count("Exchange hashpartitioning") == 1
 
 
+def _keyed_changes(spark, rows, doc="struct<_id:string,i:int>"):
+    return spark.createDataFrame(
+        rows, f"doc_id string, is_delete boolean, doc {doc}, seq int"
+    )
+
+
+def test_bucketed_table_from_empty_frame(spark, tmp_path):
+    """A bucketed table initialised from an empty frame has no bucket
+    directories to infer a schema from; its first merge and read use
+    the schema it recorded at init."""
+    table = KeyedParquetTable(spark, str(tmp_path / "bt"), buckets=4)
+    table.init(spark.createDataFrame([], "_id string, i int"))
+    assert table.read().count() == 0
+    table.merge(_keyed_changes(spark, [("a", False, ("a", 1), 1), ("b", False, ("b", 2), 1)]))
+    table.merge(_keyed_changes(spark, [("a", True, None, 2), ("c", False, ("c", 3), 2)]))
+    assert sorted(tuple(r) for r in table.read().collect()) == [("b", 2), ("c", 3)]
+    assert table.read().columns == ["_id", "i"]
+
+
+@pytest.mark.parametrize("buckets", [0, 4])
+def test_keyed_table_reopened_over_existing_path(spark, tmp_path, buckets):
+    """A fresh object over a table another object wrote (a daemon
+    restart) infers the schema once and merges correctly."""
+    path = str(tmp_path / "t")
+    first = KeyedParquetTable(spark, path, buckets=buckets)
+    first.init(spark.createDataFrame([("a", 1), ("b", 2)], "_id string, i int"))
+    first.merge(_keyed_changes(spark, [("b", False, ("b", 20), 1)]))
+
+    reopened = KeyedParquetTable(spark, path, buckets=buckets)
+    reopened.merge(_keyed_changes(spark, [("a", True, None, 2), ("c", False, ("c", 3), 2)]))
+    assert sorted(tuple(r) for r in reopened.read().collect()) == [("b", 20), ("c", 3)]
+
+
+@pytest.mark.parametrize("buckets", [0, 4])
+def test_keyed_table_schema_drift_in_one_process(spark, tmp_path, buckets):
+    """A merge whose documents add a field widens the table, and the
+    same object's next read returns that field (null for old rows)."""
+    table = KeyedParquetTable(spark, str(tmp_path / "t"), buckets=buckets)
+    table.init(spark.createDataFrame([("a", 1), ("b", 2)], "_id string, i int"))
+    assert table.read().columns == ["_id", "i"]
+    table.merge(
+        _keyed_changes(
+            spark, [("c", False, ("c", 3, "new"), 1)], doc="struct<_id:string,i:int,extra:string>"
+        )
+    )
+    got = table.read()
+    assert got.columns == ["_id", "i", "extra"]
+    assert sorted(tuple(r) for r in got.collect()) == [("a", 1, None), ("b", 2, None), ("c", 3, "new")]
+
+
 def test_apply_changes_schema_drift(spark):
     """The reference sink is schemaless: a replace that ADDS a field
     widens the table (old rows read null); one that DROPS a field

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from route81_spark.config import load_config
-from route81_spark.jobs.consumer import consumer_job
+from route81_spark.jobs.consumer import consumer_job, oplog_seq
 from route81_spark.jobs.producer import namespace_filter, streaming_producer_job
 from route81_spark.model.schemas import change_event_schema
 from route81_spark.sinks.merge import KeyedParquetTable
@@ -137,39 +137,10 @@ def test_streaming_loopback(spark, tmp_path):
     table.init(spark.createDataFrame([], DOC_SCHEMA))
     spec = cfg.consumers[0]
 
-    # seq from the envelope's oplog timestamp — on the wire ts is the
-    # tagged {"$timestamp":{t,i}} form
-    seq_schema = T.StructType(
-        [
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField(
-                            "ts",
-                            T.StructType(
-                                [
-                                    T.StructField(
-                                        "$timestamp",
-                                        T.StructType(
-                                            [
-                                                T.StructField("t", T.LongType()),
-                                                T.StructField("i", T.LongType()),
-                                            ]
-                                        ),
-                                    )
-                                ]
-                            ),
-                        )
-                    ]
-                ),
-            )
-        ]
-    )
-    ts = F.from_json(F.col("value").cast("string"), seq_schema)["meta"]["ts"]["$timestamp"]
+    # seq from the envelope's oplog timestamp (the daemon's own helper)
     rec_stream = (
         spark.readStream.schema(records.schema).parquet(str(topic_dir))
-        .withColumn("seq", ts.getField("t") * F.lit(10_000_000_000) + ts.getField("i"))
+        .withColumn("seq", oplog_seq(F.col("value")))
     )
     consumer_stats: dict = {}
     cq = consumer_job(
