@@ -79,7 +79,7 @@ class Config:
     fail_fast: bool = False
     pprof: bool = False              # route81.go:141, served :967-973
     # remaining route81.go:120-147 toggles, TOML-settable like the
-    # reference (each also has a CLI flag; flag OR config wins)
+    # reference (each also has a CLI flag, merged in by main.merge_flags)
     disable_change_stream: bool = False
     resume: bool = False
     disable_stats: bool = False
@@ -282,3 +282,10 @@ def kafka_sink_options(cfg: Config) -> dict[str, str]:
             f'{module} required username="{user or ""}" password="{pw or ""}";'
         )
     return out
+
+
+def kafka_options(cfg: Config) -> dict[str, str]:
+    """Every Kafka client option of the configured transport: the
+    bootstrap string plus the mapped [kafka-settings]. The producer
+    sink, the consumer source and batch topic writes all take these."""
+    return {"kafka.bootstrap.servers": cfg.kafka_servers, **kafka_sink_options(cfg)}

@@ -7,6 +7,7 @@ from pyspark.sql import types as T
 from route81_spark.envelope import EnvelopeConfig
 from route81_spark.envelope import build_envelope
 from route81_spark.envelope import with_synthetic_id
+from route81_spark.jobs.consumer import oplog_order
 from route81_spark.ops.util import det_round_sql
 from route81_spark.pipeline import apply_pipeline
 from route81_spark.sinks.merge import latest_per_key
@@ -109,7 +110,7 @@ def cdc_merge_state(spark, sf_dir):
         F.col("documentKey._id").alias("doc_id"),
         (F.col("operationType") == "delete").alias("is_delete"),
         F.col("fullDocument").alias("doc"),
-        (F.col("clusterTime.t") * F.lit(10_000_000_000) + F.col("clusterTime.i")).alias("seq"),
+        oplog_order(F.col("clusterTime.t"), F.col("clusterTime.i")).alias("seq"),
     )
     final = latest_per_key(changes).filter(~F.col("is_delete")).select("doc.*")
     return final

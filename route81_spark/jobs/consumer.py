@@ -16,7 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from route81_spark.config import ConsumerSpec
+from route81_spark.config import Config, ConsumerSpec, kafka_options
 from route81_spark.model.schemas import decode_envelope
 from route81_spark.sinks.classify import ClassifierConfig, classify
 from route81_spark.sinks.merge import KeyedParquetTable
@@ -100,11 +100,16 @@ def apply_consumer_batch(
     return merge_classified(table, decode_classify(batch, spec, doc_schema))
 
 
+def oplog_order(t: Column, i: Column) -> Column:
+    """The oplog ordering rule: timestamp (t, i) -> t * 2^32 + i.
+    MongoDB's increment `i` is a uint32, so this keeps (t, i) order and
+    fits a long for every t below 2^31 (Unix seconds up to 2038)."""
+    return t * F.lit(1 << 32) + i
+
+
 def oplog_seq(value_col: Column) -> Column:
     """Per-key ordering key from an ext-JSON envelope's oplog timestamp
-    (meta.ts.$timestamp {t, i}): t * 2^32 + i. MongoDB's increment `i`
-    is a uint32, so this keeps (t, i) order and fits a long for every
-    t below 2^31 (Unix seconds up to 2038)."""
+    (meta.ts.$timestamp {t, i}), by `oplog_order`."""
     ts_type = T.StructType([T.StructField("t", T.LongType()), T.StructField("i", T.LongType())])
     seq_schema = T.StructType(
         [
@@ -117,27 +122,26 @@ def oplog_seq(value_col: Column) -> Column:
         ]
     )
     ts = F.from_json(value_col.cast("string"), seq_schema)["meta"]["ts"]["$timestamp"]
-    return ts.getField("t") * F.lit(1 << 32) + ts.getField("i")
+    return oplog_order(ts.getField("t"), ts.getField("i"))
 
 
 def topic_source(
     spark: SparkSession,
-    cfg,
+    cfg: Config,
     spec: ConsumerSpec,
-    sink_dir: str,
-    record_schema: T.StructType,
+    sink_dir: str | None,
+    record_schema: T.StructType | None,
 ) -> DataFrame:
     """Consumer source selection (P12): with a configured `kafka`
     bootstrap string, the real format("kafka") subscription (earliest
     offsets + headers, group parallelism ≡ topic partitions,
     route81.go:1146-1175); without one, a file stream over the parquet
-    'topic' directory the producer wrote — identical record schema."""
-    if getattr(cfg, "kafka_servers", ""):
-        from route81_spark.config import kafka_sink_options
-
-        reader = (
+    'topic' directory the producer wrote — identical record schema.
+    `sink_dir` and `record_schema` only serve the parquet branch."""
+    if cfg.kafka_servers:
+        return (
             spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", cfg.kafka_servers)
+            .options(**kafka_options(cfg))
             .option("subscribe", ",".join(spec.kafka_topics))
             .option("startingOffsets", "earliest")
             .option("includeHeaders", "true")
@@ -145,10 +149,8 @@ def topic_source(
             # bulk-size x workers bounds one flush cycle's records
             # (route81.go:991-1017: N workers each buffering <= bulk-size)
             .option("maxOffsetsPerTrigger", str(spec.bulk_size * spec.workers))
+            .load()
         )
-        for k, v in kafka_sink_options(cfg).items():
-            reader = reader.option(k, v)
-        return reader.load()
     return spark.readStream.schema(record_schema).parquet(sink_dir)
 
 

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from route81_spark.config import Config
+from route81_spark.config import Config, kafka_options
 from route81_spark.envelope import EnvelopeConfig, ProducerMap, build_envelope, route_topic
 from route81_spark.pipeline import apply_pipeline
 from route81_spark.sources.direct_read import direct_read
@@ -220,32 +220,10 @@ def envelope_change_stream(events: DataFrame, namespace: str, cfg: Config) -> Da
     return doc_records.unionByName(cmd_records)
 
 
-def streaming_producer_multi(
-    spark: SparkSession,
-    cfg: Config,
-    event_streams: dict[str, DataFrame],
-    sink_dir: str,
-    checkpoint_dir: str,
-    trigger_seconds: float = 1.0,
-):
-    """All change-stream namespaces through ONE streaming query — the
-    reference funnels every namespace into a single producer loop with a
-    single resume timestamp (route81.go:1224-1234); one query = one
-    checkpoint preserves that recovery model. Per-namespace pipelines
-    apply before the union; records carry their routed topic."""
-    unioned: DataFrame | None = None
-    for ns, stream in event_streams.items():
-        records = envelope_change_stream(stream, ns, cfg)
-        unioned = records if unioned is None else unioned.unionByName(records)
-    if unioned is None:
-        raise ValueError("no change-stream namespaces configured")
-    return _start_topic_sink(unioned, cfg, sink_dir, checkpoint_dir, trigger_seconds)
-
-
 def _start_topic_sink(
     records: DataFrame,
     cfg: Config,
-    sink_dir: str,
+    sink_dir: str | None,
     checkpoint_dir: str,
     trigger_seconds: float,
 ):
@@ -256,15 +234,11 @@ def _start_topic_sink(
     land in a parquet 'topic' directory."""
     writer = records.writeStream
     if cfg.kafka_servers:
-        from route81_spark.config import kafka_sink_options
-
         writer = (
             writer.format("kafka")
-            .option("kafka.bootstrap.servers", cfg.kafka_servers)
+            .options(**kafka_options(cfg))
             .option("includeHeaders", "true")
         )
-        for k, v in kafka_sink_options(cfg).items():
-            writer = writer.option(k, v)
     else:
         writer = writer.format("parquet").option("path", sink_dir)
     return (
@@ -279,12 +253,13 @@ def streaming_producer_job(
     cfg: Config,
     event_stream: DataFrame,
     namespace: str,
-    sink_dir: str,
+    sink_dir: str | None,
     checkpoint_dir: str,
     trigger_seconds: float = 1.0,
 ):
-    """Wire a change-event stream through the producer path into a
-    parquet topic sink. Returns the StreamingQuery. The observe()
+    """Wire a change-event stream through the producer path into the
+    configured topic sink (Kafka when `cfg.kafka_servers` is set, which
+    ignores `sink_dir`). Returns the StreamingQuery. The observe()
     metrics mirror the reference's per-op counters (route81.go:621-679)."""
     observed = event_stream.observe(
         "producer_stats",

@@ -14,8 +14,10 @@ Mirrors the reference's single-binary UX (/root/reference/route81.go:
 * change-stream namespaces run as a streaming job over a change-event
   JSON directory (the harness CDC source; swap for the Mongo connector
   in production) until interrupted
-* records go to parquet topic dirs, or straight to Kafka when
-  --kafka-bootstrap is given (same record schema either way)
+* records go to parquet topic dirs, or straight to Kafka when the
+  `kafka` key or --kafka-bootstrap is set (same record schema either
+  way); main() merges every CLI flag into the config once, before
+  --view-config, and the flows read only the config
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ import argparse
 import os
 import sys
 
-from route81_spark.config import Config, load_config
+from route81_spark.config import Config, kafka_options, load_config
 from route81_spark.session import get_spark
 
 
@@ -36,26 +38,27 @@ def _parse_kv(pairs: list[str]) -> dict[str, str]:
     return out
 
 
-def effective_bootstrap(cfg: Config, args) -> str:
-    """Kafka seam selection for the daemon: the --kafka-bootstrap flag
-    ORs over the TOML `kafka` key (route81's flag/TOML merge semantics,
-    route81.go:342-404) — either selects the real format("kafka")
-    path; both empty keeps the parquet topic-dir loopback."""
-    return getattr(args, "kafka_bootstrap", None) or cfg.kafka_servers
+def merge_flags(cfg: Config, args) -> None:
+    """route81's flag/TOML merge (route81.go:342-404), done once: a given
+    flag overrides its TOML key. Every flow reads only `cfg` afterwards;
+    `kafka` (flag or TOML) switches all of them from the parquet
+    topic-dir loopback to the real format("kafka") transport."""
+    if args.kafka_bootstrap:
+        cfg.kafka_servers = args.kafka_bootstrap
+    if args.http_server_addr is not None:
+        cfg.http_server_addr = args.http_server_addr
+    for toggle in (
+        "disable_change_stream", "disable_stats", "disable_stats_log", "http_server", "pprof",
+    ):
+        if getattr(args, toggle):
+            setattr(cfg, toggle, True)
 
 
-def write_records(
-    records, sink_dir: str | None, kafka_bootstrap: str | None, cfg: Config | None = None
-) -> None:
-    if kafka_bootstrap:
-        from route81_spark.config import kafka_sink_options
-
-        writer = records.write.format("kafka").option(
-            "kafka.bootstrap.servers", kafka_bootstrap
-        )
-        for k, v in (kafka_sink_options(cfg) if cfg else {}).items():
-            writer = writer.option(k, v)
-        writer.save()
+def write_records(records, sink_dir: str | None, cfg: Config | None = None) -> None:
+    """Batch topic write: Kafka when `cfg.kafka_servers` is set, else
+    parquet topic partitions under `sink_dir` (also for cfg=None)."""
+    if cfg is not None and cfg.kafka_servers:
+        records.write.format("kafka").options(**kafka_options(cfg)).save()
     else:
         records.write.mode("append").partitionBy("topic").parquet(sink_dir)
 
@@ -66,7 +69,6 @@ def run_direct_reads(spark, cfg: Config, tables: dict, ids: dict, args) -> None:
     from route81_spark.jobs.producer import direct_read_job
 
     ids_map = {ns: v.split(",") for ns, v in ids.items()}
-    bootstrap = effective_bootstrap(cfg, args)
     if cfg.mongo_uri and len(cfg.direct_read_namespaces) > cfg.direct_read_concur:
         # reference parity (route81.go:449-450): at most
         # direct-read-concur collections scan the LIVE source cluster at
@@ -80,10 +82,10 @@ def run_direct_reads(spark, cfg: Config, tables: dict, ids: dict, args) -> None:
                 cfg, direct_read_namespaces=all_ns[i : i + cfg.direct_read_concur]
             )
             records = direct_read_job(spark, sub, tables, ids_map)
-            write_records(records, args.sink_dir, bootstrap, cfg)
+            write_records(records, args.sink_dir, cfg)
         return
     records = direct_read_job(spark, cfg, tables, ids_map)
-    write_records(records, args.sink_dir, bootstrap, cfg)
+    write_records(records, args.sink_dir, cfg)
 
 
 def ckpt_dir(cfg: Config, root: str, name: str) -> str:
@@ -108,6 +110,9 @@ def run_change_streams(spark, cfg: Config, doc_schemas: dict, args):
         streaming_producer_job,
     )
 
+    ckpt_root = args.checkpoint_dir or args.sink_dir
+    if ckpt_root is None:
+        raise SystemExit("change streams need --checkpoint-dir (or --sink-dir) for their checkpoints")
     queries = []
     for ns in cfg.change_stream_namespaces:
         stream = change_stream_source(
@@ -116,20 +121,21 @@ def run_change_streams(spark, cfg: Config, doc_schemas: dict, args):
         stream = namespace_filter(stream, cfg).drop("ns_full")
         q = streaming_producer_job(
             spark, cfg, stream, ns,
-            sink_dir=os.path.join(args.sink_dir, ns),
-            checkpoint_dir=ckpt_dir(cfg, args.checkpoint_dir or args.sink_dir, f"_ckpt_{ns}"),
+            sink_dir=None if cfg.kafka_servers else os.path.join(args.sink_dir, ns),
+            checkpoint_dir=ckpt_dir(cfg, ckpt_root, f"_ckpt_{ns}"),
         )
         queries.append(q)
     return queries
 
 
-def run_consumers(spark, cfg: Config, args) -> list:
+def run_consumers(spark, cfg: Config, args, listener=None) -> list:
     """Wire each [[consumer]] block: kafka-shaped records (parquet topic
-    dirs, or Kafka when --kafka-bootstrap) -> decode -> classify ->
-    keyed merge into --tables-out/<ns> (route81 consumer path §3.3)."""
+    dirs, or Kafka when `kafka` is configured) -> decode -> classify ->
+    keyed merge into --tables-out/<ns> (route81 consumer path §3.3).
+    With a stats `listener`, each consumer counts into its own dict."""
     from pyspark.sql import functions as F
 
-    from route81_spark.jobs.consumer import consumer_job, consumer_sink, oplog_seq
+    from route81_spark.jobs.consumer import consumer_job, consumer_sink, oplog_seq, topic_source
 
     queries = []
     for spec in cfg.consumers:
@@ -152,37 +158,24 @@ def run_consumers(spark, cfg: Config, args) -> list:
                     f"seed the target table first: "
                     f"{os.path.join(args.tables_out, spec.mongo_namespace)}/current must exist"
                 )
-        bootstrap = effective_bootstrap(cfg, args)
-        if bootstrap:
-            from route81_spark.config import kafka_sink_options
-
-            reader = (
-                spark.readStream.format("kafka")
-                .option("kafka.bootstrap.servers", bootstrap)
-                .option("subscribe", ",".join(spec.kafka_topics))
-                .option("startingOffsets", "earliest")  # route81.go:1150
-                .option("includeHeaders", "true")
-                .option("kafka.group.id", spec.group_id)
-                # bulk-size x workers bounds one flush cycle's records
-                .option("maxOffsetsPerTrigger", str(spec.bulk_size * spec.workers))
-            )
-            for k, v in kafka_sink_options(cfg).items():
-                reader = reader.option(k, v)
-            stream = reader.load().withColumn("seq", F.col("offset"))
+        if cfg.kafka_servers:
+            stream = topic_source(spark, cfg, spec, None, None).withColumn("seq", F.col("offset"))
         else:
             # streaming producers write sink_dir/<topic>; batch direct
             # reads write sink_dir/topic=<topic> partitions
             topic_dir = os.path.join(args.sink_dir, spec.kafka_topics[0])
             if not os.path.isdir(topic_dir):
                 topic_dir = os.path.join(args.sink_dir, f"topic={spec.kafka_topics[0]}")
-            first = spark.read.parquet(topic_dir)
-            stream = spark.readStream.schema(first.schema).parquet(topic_dir)
+            schema = spark.read.parquet(topic_dir).schema
             # per-key ordering from the envelope's oplog timestamp
             # (kafka mode uses the record offset instead)
-            stream = stream.withColumn("seq", oplog_seq(F.col("value")))
+            stream = topic_source(spark, cfg, spec, topic_dir, schema).withColumn(
+                "seq", oplog_seq(F.col("value"))
+            )
         q = consumer_job(
             spark, spec, stream, table, doc_schema,
             ckpt_dir(cfg, args.checkpoint_dir or args.tables_out, f"_ckpt_{spec.mongo_namespace}"),
+            stats=listener.consumer_stats() if listener else None,
         )
         queries.append(q)
     return queries
@@ -197,7 +190,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--sink-dir", help="parquet topic sink root")
     ap.add_argument("--tables-out", help="keyed-table root for consumers")
     ap.add_argument("--checkpoint-dir")
-    ap.add_argument("--kafka-bootstrap", help="produce to Kafka instead of parquet")
+    ap.add_argument("--kafka-bootstrap",
+                    help="Kafka bootstrap for every flow instead of parquet (overrides `kafka`)")
     ap.add_argument("--duration", type=float, help="stop streaming after N seconds")
     # reference flag parity (route81.go:415-469)
     ap.add_argument("--view-config", action="store_true",
@@ -210,7 +204,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="keep counters but don't log them")
     ap.add_argument("--http-server", action="store_true",
                     help="serve /started /healthz /stats")
-    ap.add_argument("--http-server-addr", default=":8080",
+    ap.add_argument("--http-server-addr",
                     help="listen address for --http-server ([host]:port)")
     ap.add_argument("--pprof", action="store_true",
                     help="serve /debug/pprof/* (route81.go:457)")
@@ -218,37 +212,24 @@ def main(argv: list[str] | None = None) -> int:
 
     with open(args.config) as f:
         cfg = load_config(f.read())
+    merge_flags(cfg, args)
     if args.view_config:
         import dataclasses, json as _json
 
         print(_json.dumps(dataclasses.asdict(cfg), indent=2, default=str))
         return 0
-    # each toggle is TOML-settable like the reference (route81.go:120-147);
-    # the CLI flag ORs on top (route81.go:342-404 merge semantics)
-    if args.disable_change_stream or cfg.disable_change_stream:
+    if cfg.disable_change_stream:
         cfg.change_stream_namespaces = []
     spark = get_spark("route81_spark_main")
 
-    http_server = None
-    want_http = args.http_server or cfg.http_server
-    disable_stats = args.disable_stats or cfg.disable_stats
-    if want_http and not disable_stats:
+    listener = None
+    if cfg.http_server and not cfg.disable_stats:
         from route81_spark.stats import StatsListener, serve_stats
 
-        listener = StatsListener(
-            log=not (args.disable_stats_log or cfg.disable_stats_log),
-            interval_s=cfg.stats_seconds,
-        )
+        listener = StatsListener(log=not cfg.disable_stats_log, interval_s=cfg.stats_seconds)
         spark.streams.addListener(listener)
-        addr = (
-            args.http_server_addr
-            if args.http_server_addr != ":8080"
-            else cfg.http_server_addr
-        )
-        port = int(addr.rsplit(":", 1)[-1] or 8080)
-        http_server = serve_stats(
-            listener, port=port, pprof=args.pprof or cfg.pprof
-        )
+        port = int(cfg.http_server_addr.rsplit(":", 1)[-1] or 8080)
+        serve_stats(listener, port=port, pprof=cfg.pprof)
 
     try:
         if cfg.direct_read_namespaces:
@@ -267,7 +248,7 @@ def main(argv: list[str] | None = None) -> int:
                     schemas[ns] = fd
             queries += run_change_streams(spark, cfg, schemas, args)
         if cfg.consumers and args.tables_out:
-            queries += run_consumers(spark, cfg, args)
+            queries += run_consumers(spark, cfg, args, listener)
         if queries:
             if args.duration:
                 import time as _time

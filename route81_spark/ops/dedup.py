@@ -64,32 +64,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _seeded_hasher(j: int):
-    # NB: must be a 1-arg lambda — F.transform treats a 2-parameter
-    # callable as (element, index), so a `lambda s, j=j:` default-arg
-    # closure would silently receive the array index as the seed.
-    return lambda s: h64(s, j)
-
-
-def minhash_signature(text_col: Column, k: int = 16, shingle_n: int = 3) -> Column:
-    """k-minhash signature as one array column. Convenient for ad-hoc
-    per-row use, but each consumer of the result re-inlines the whole
-    shingle pipeline (CollapseProject), so for fan-out consumers use
-    minhash_signatures() — the aggregation form — instead. The shingle
-    array binds to a lambda variable so the k per-seed scans share one
-    shingle construction."""
-
-    def with_sh(sh: Column) -> Column:
-        return F.array(
-            *[
-                F.array_min(F.transform(sh, _seeded_hasher(j))).alias(f"mh{j}")
-                for j in range(k)
-            ]
-        )
-
-    return F.get(F.transform(F.array(shingles(text_col, shingle_n)), with_sh), 0)
-
-
 # Universal-hash family for MinHash: one md5 base hash per shingle, k
 # derived hashes h_j = ((base mod P) * A_j + B_j) mod P with P = 2^31-1.
 # 8x less md5 work than hashing per seed, and every value is exactly
@@ -132,16 +106,6 @@ def minhash_signatures(
     )
     return hashed.groupBy(id_col).agg(
         *[F.min(f"__h{j}").alias(f"mh{j}") for j in range(k)]
-    )
-
-
-def minhash_bands(sig: Column, bands: int, rows: int) -> Column:
-    """Band hashes: md5 over each contiguous `rows`-slice of the signature."""
-    return F.array(
-        *[
-            F.md5(F.concat_ws(",", F.slice(sig, b * rows + 1, rows))).alias(f"band{b}")
-            for b in range(bands)
-        ]
     )
 
 

@@ -104,12 +104,6 @@ def s_stem_py(tok: str) -> str:
     return tok
 
 
-def distinct_ratio(col: Column) -> Column:
-    tk = tokens(col)
-    # empty token list -> null (not an ANSI DIVIDE_BY_ZERO abort)
-    return F.when(F.size(tk) > 0, F.size(F.array_distinct(tk)) / F.size(tk))
-
-
 def quality_score(text_col: Column) -> Column:
     """Deterministic [0,1] quality heuristic: length factor x lexical
     diversity x alpha ratio. The components are the standard cheap
@@ -125,10 +119,6 @@ def marker_hits(text_col: Column, words: list[str]) -> Column:
     """How many tokens of `text_col` are in `words` (with multiplicity)."""
     tk = tokens(text_col)
     return F.size(F.filter(tk, lambda t: t.isin(words)))
-
-
-def lang_scores(text_col: Column) -> dict[str, Column]:
-    return {lang: marker_hits(text_col, ws) for lang, ws in LANG_MARKERS.items()}
 
 
 def lang_id_tk(tk: Column) -> Column:

@@ -104,17 +104,6 @@ def _args(arg: Any, df: DataFrame | None, n: int | None = None) -> list[Column]:
     return [compile_expr(a, df) for a in items]
 
 
-def _variadic(f: Callable[[Column, Column], Column]):
-    def build(arg: Any, df: DataFrame | None) -> Column:
-        cols = _args(arg, df)
-        out = cols[0]
-        for c in cols[1:]:
-            out = f(out, c)
-        return out
-
-    return build
-
-
 def _require_utc(op: str, arg: dict) -> None:
     """Date operators run in the session's UTC zone; a non-UTC timezone
     argument would be silently wrong — reject it loudly instead."""

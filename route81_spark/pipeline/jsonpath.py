@@ -113,11 +113,6 @@ def compile_match_json(query: dict, json_col: Column) -> Column:
     return out
 
 
-def project_json(json_col: Column, fields: dict[str, str]) -> list[Column]:
-    """Inclusion projection over a JSON document: {out_name: path}."""
-    return [json_field(json_col, path).alias(name) for name, path in fields.items()]
-
-
 # --- dynamic pipeline ----------------------------------------------------
 
 _CASTS = {

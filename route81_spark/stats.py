@@ -19,7 +19,8 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 class StatsListener(StreamingQueryListener):
     """Accumulates the observe('producer_stats', ...) metrics emitted by
-    the producer job — the counter set mirrors route81.go:488-509."""
+    the producer job plus the consumer jobs' success/failed dicts — the
+    counter set mirrors route81.go:488-509."""
 
     def __init__(self, log: bool = True, interval_s: float = 0.0) -> None:
         # log=False ≡ route81's disable-stats-log: counters accumulate
@@ -36,6 +37,7 @@ class StatsListener(StreamingQueryListener):
         }
         self.started_at = time.time()
         self.terminated: list[str] = []
+        self._consumer_stats: list[dict] = []
 
     def onQueryStarted(self, event) -> None:  # noqa: N802
         pass
@@ -66,9 +68,21 @@ class StatsListener(StreamingQueryListener):
     def onQueryIdle(self, event) -> None:  # noqa: N802
         pass
 
+    def consumer_stats(self) -> dict:
+        """A fresh counter dict for one `consumer_job(stats=...)`. Each
+        consumer writes only its own dict; snapshot() adds them all in."""
+        d: dict[str, int] = {}
+        with self.lock:
+            self._consumer_stats.append(d)
+        return d
+
     def snapshot(self) -> dict:
         with self.lock:
-            return dict(self.counters)
+            out = dict(self.counters)
+            for d in self._consumer_stats:
+                out["success"] += d.get("success", 0)
+                out["failed"] += d.get("failed", 0)
+            return out
 
 
 def _thread_stacks() -> str:

@@ -185,35 +185,6 @@ def test_streaming_loopback(spark, tmp_path):
     spark.streams.removeListener(listener)
 
 
-def test_multi_namespace_single_query(spark, tmp_path):
-    """Two namespaces through one streaming query/checkpoint
-    (route81.go:1224-1234: one producer loop, one resume point)."""
-    from route81_spark.jobs.producer import streaming_producer_multi
-
-    cfg = load_config('topic-name-prefix = "p"\n')
-    dirs = {}
-    for ns in ("test.a", "test.b"):
-        d = tmp_path / ns
-        d.mkdir()
-        with open(d / "e.json", "w") as f:
-            for i in range(5):
-                f.write(json.dumps(_event("insert", str(i), i, t=1)) + "\n")
-        dirs[ns] = spark.readStream.schema(change_event_schema(DOC_SCHEMA)).json(str(d))
-    q = streaming_producer_multi(
-        spark, cfg, dirs, str(tmp_path / "out"), str(tmp_path / "ck"), 0.5
-    )
-    try:
-        assert _await(
-            lambda: spark.read.parquet(str(tmp_path / "out")).count() == 10
-        )
-    finally:
-        q.stop()
-    topics = {
-        r["topic"] for r in spark.read.parquet(str(tmp_path / "out")).select("topic").collect()
-    }
-    assert topics == {"p.test.a", "p.test.b"}
-
-
 def test_command_envelope_contract(spark):
     """Commands: key = namespace (db for dropDatabase), op='c', no data,
     no _id header; dropDatabase routes by db name (route81.go:1330-1398)."""
@@ -380,20 +351,171 @@ bulk-flush-duration = "1s"
     assert set(merged.columns) == {"n_nationkey", "n_name", "n_regionkey", "_id"}
 
 
-def test_effective_bootstrap_flag_or_toml():
-    # the TOML `kafka` key must select the real sink even without the
-    # CLI flag (route81's flag/TOML merge, route81.go:342-404)
-    from argparse import Namespace
+# every CLI flag main() merges into the config:
+# (Config field, TOML key, flag argv, value the flag sets, TOML value, default)
+MERGED_FLAGS = [
+    ("kafka_servers", "kafka", ["--kafka-bootstrap", "f:9092"], "f:9092", "t:9092", ""),
+    # a flag equal to the default still wins over the TOML
+    ("http_server_addr", "http-server-addr", ["--http-server-addr", ":8080"], ":8080", ":9002", ":8080"),
+    ("disable_change_stream", "disable-change-stream", ["--disable-change-stream"], True, True, False),
+    ("disable_stats", "disable-stats", ["--disable-stats"], True, True, False),
+    ("disable_stats_log", "disable-stats-log", ["--disable-stats-log"], True, True, False),
+    ("http_server", "http-server", ["--http-server"], True, True, False),
+    ("pprof", "pprof", ["--pprof"], True, True, False),
+]
 
-    from route81_spark.main import effective_bootstrap
 
-    toml_cfg = load_config('kafka = "broker:9092"')
-    plain = load_config("")
-    none_args = Namespace(kafka_bootstrap=None)
-    flag_args = Namespace(kafka_bootstrap="flag:9092")
-    assert effective_bootstrap(toml_cfg, none_args) == "broker:9092"
-    assert effective_bootstrap(plain, none_args) == ""
-    assert effective_bootstrap(toml_cfg, flag_args) == "flag:9092"  # flag wins
+@pytest.mark.parametrize("case", ["flag", "toml", "neither"])
+@pytest.mark.parametrize(
+    "field,key,argv,flag_value,toml_value,default", MERGED_FLAGS, ids=[m[0] for m in MERGED_FLAGS]
+)
+def test_view_config_shows_merged_flags(
+    tmp_path, capsys, case, field, key, argv, flag_value, toml_value, default
+):
+    """route81's flag/TOML merge (route81.go:342-404): a given flag wins
+    over its TOML key, the TOML key alone applies, neither keeps the
+    default; --view-config prints the merged config."""
+    from route81_spark.main import main
+
+    cfg_path = tmp_path / "c.toml"
+    if case == "flag":
+        overridden = (not flag_value) if isinstance(flag_value, bool) else toml_value
+        cfg_path.write_text(f"{key} = {json.dumps(overridden)}\n")
+        extra, want = argv, flag_value
+    elif case == "toml":
+        cfg_path.write_text(f"{key} = {json.dumps(toml_value)}\n")
+        extra, want = [], toml_value
+    else:
+        cfg_path.write_text("")
+        extra, want = [], default
+    assert main(["--config", str(cfg_path), "--view-config", *extra]) == 0
+    assert json.loads(capsys.readouterr().out)[field] == want
+
+
+class _FakeQuery:
+    def awaitTermination(self):  # noqa: N802
+        pass
+
+    def stop(self):
+        pass
+
+
+def test_kafka_flag_switches_streaming_producer(spark, tmp_path, monkeypatch):
+    """--kafka-bootstrap selects Kafka for the change-stream producer too:
+    it gets the merged config and no parquet path, and runs without
+    --sink-dir; with no checkpoint root either, main exits naming
+    --checkpoint-dir."""
+    from route81_spark.jobs import producer
+    from route81_spark.main import main
+
+    events = tmp_path / "events" / "test.test"
+    events.mkdir(parents=True)
+    (events / "e.json").write_text(json.dumps(_event("insert", "1", 1, t=1)) + "\n")
+    cfg_path = tmp_path / "c.toml"
+    cfg_path.write_text('change-stream-namespaces = ["test.test"]\n')
+    started = []
+
+    def fake_producer(spark, cfg, stream, ns, sink_dir, checkpoint_dir, trigger_seconds=1.0):
+        started.append((cfg.kafka_servers, sink_dir, checkpoint_dir))
+        return _FakeQuery()
+
+    monkeypatch.setattr(producer, "streaming_producer_job", fake_producer)
+    argv = [
+        "--config", str(cfg_path),
+        "--events-dir", str(tmp_path / "events"),
+        "--kafka-bootstrap", "b:9092",
+    ]
+    assert main([*argv, "--checkpoint-dir", str(tmp_path / "ck")]) == 0
+    assert [s[:2] for s in started] == [("b:9092", None)]
+    assert started[0][2].startswith(str(tmp_path / "ck"))
+    with pytest.raises(SystemExit, match="--checkpoint-dir"):
+        main(argv)
+
+
+def test_consumer_counts_reach_stats(spark, tmp_path, monkeypatch):
+    """/stats adds in the consumers' success/failed counters
+    (route81.go:497-505): main hands each consumer_job its own dict
+    from the listener, so two consumers never write one key."""
+    from route81_spark import stats as stats_mod
+    from route81_spark.jobs import consumer
+    from route81_spark.main import main
+
+    topics = tmp_path / "topics"
+    spark.createDataFrame([(b"k", b"{}")], "key binary, value binary").write.parquet(
+        str(topics / "t")
+    )
+    for ns in ("db.a", "db.b"):
+        KeyedParquetTable(spark, str(tmp_path / "tables" / ns)).init(
+            spark.createDataFrame([], "_id string, x int")
+        )
+    cfg_path = tmp_path / "c.toml"
+    cfg_path.write_text(
+        '[[consumer]]\ntopics = ["t"]\nnamespace = "db.a"\n'
+        '[[consumer]]\ntopics = ["t"]\nnamespace = "db.b"\n'
+    )
+    listeners, handed = [], []
+    monkeypatch.setattr(
+        stats_mod, "serve_stats", lambda listener, port=0, pprof=False: listeners.append(listener)
+    )
+
+    def fake_consumer(spark, spec, stream, table, doc_schema, checkpoint_dir, stats=None):
+        handed.append(stats)
+        # what one batch's on_batch writes
+        stats["success"] = 3
+        stats["failed"] = 1
+        return _FakeQuery()
+
+    monkeypatch.setattr(consumer, "consumer_job", fake_consumer)
+    try:
+        rc = main(
+            [
+                "--config", str(cfg_path),
+                "--sink-dir", str(topics),
+                "--tables-out", str(tmp_path / "tables"),
+                "--http-server",
+            ]
+        )
+    finally:
+        for listener in listeners:
+            spark.streams.removeListener(listener)
+    assert rc == 0
+    assert len(handed) == 2 and handed[0] is not handed[1]
+    snap = listeners[0].snapshot()
+    assert (snap["success"], snap["failed"]) == (6, 2)
+
+
+def test_consumer_stats_concurrent_batches():
+    """Consumers write their own dicts from their own batch threads (as
+    consumer_job's on_batch does) while /stats snapshots: no count is
+    lost and the summed counter never goes down."""
+    import sys
+    import threading
+
+    listener = StatsListener(log=False)
+    dicts = [listener.consumer_stats() for _ in range(8)]
+    n = 2000
+
+    def batches(d):
+        for _ in range(n):
+            d["success"] = d.get("success", 0) + 1
+            d["failed"] = d.get("failed", 0)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=batches, args=(d,)) for d in dicts]
+        for t in threads:
+            t.start()
+        seen = []
+        while any(t.is_alive() for t in threads):
+            seen.append(listener.snapshot()["success"])
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == sorted(seen)
+    assert listener.snapshot()["success"] == 8 * n
 
 
 def test_envelope_change_stream_live_applies_suffix_only(spark, monkeypatch):
