@@ -15,38 +15,22 @@ declared document schema — the output DataFrame has exactly the
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from route81_spark.codecs.extjson import ext_json_col
 from route81_spark.codecs.plainjson import plain_json_string
+from route81_spark.config import Config
 
 
-@dataclass
-class ProducerMap:
-    """First-match-wins namespace -> topic rewrite
-    (/root/reference/route81.go:115-118, 1330-1351; README.md:236-259).
-    An empty mongo_namespace matches everything; otherwise the entry
-    matches when it equals or is a prefix of the namespace."""
-
-    mongo_namespace: str
-    kafka_topic: str
-
-
-@dataclass
-class EnvelopeConfig:
-    topic_name_prefix: str = ""
-    producer_maps: list[ProducerMap] = field(default_factory=list)
-
-
-def route_topic(ns_col: Column, cfg: EnvelopeConfig) -> Column:
+def route_topic(ns_col: Column, cfg: Config) -> Column:
     """Topic = [prefix "."] + (producer-map rewrite | namespace); the
     prefix applies to map-matched names too, and the first matching map
     entry wins (route81.go:1330-1351 writes TopicPrefix before the
-    ProducerMaps rewrite)."""
+    ProducerMaps rewrite). An empty mongo_namespace matches everything;
+    otherwise an entry matches when it equals or is a prefix of the
+    namespace (README.md:236-259)."""
     out = None
     for m in cfg.producer_maps:
         cond = (
@@ -79,7 +63,7 @@ def _id_plain_json(id_col: Column, id_type: T.DataType) -> Column:
 def build_envelope(
     df: DataFrame,
     namespace: str,
-    cfg: EnvelopeConfig | None = None,
+    cfg: Config | None = None,
     id_col: str = "_id",
     op_col: str | None = None,
     ts_col: str | None = None,
@@ -97,7 +81,7 @@ def build_envelope(
     Output schema: key binary, value binary, headers
     array<struct<key:string,value:binary>>, topic string.
     """
-    cfg = cfg or EnvelopeConfig()
+    cfg = cfg or Config()
     data_cols = data_cols or [
         c for c in df.columns if c not in {op_col, ts_col, updates_col} - {None}
     ]
@@ -179,7 +163,7 @@ def build_envelope(
 def build_envelope_passthrough(
     df: DataFrame,
     namespace: str,
-    cfg: EnvelopeConfig | None = None,
+    cfg: Config | None = None,
     id_col: str = "_id",
     json_col: str = "doc_json",
     op_col: str | None = None,
@@ -191,7 +175,7 @@ def build_envelope_passthrough(
     map[string]interface{} handling (route81.go:66). The envelope text is
     assembled by string concatenation (meta is schema-known; data is the
     raw payload), so this path never parses the document."""
-    cfg = cfg or EnvelopeConfig()
+    cfg = cfg or Config()
     if ts_col:
         ts_json = F.concat(
             F.lit('{"$timestamp":{"t":'),

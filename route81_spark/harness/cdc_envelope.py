@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from route81_spark.envelope import EnvelopeConfig
+from route81_spark.config import Config
 from route81_spark.envelope import build_envelope
 from route81_spark.envelope import with_synthetic_id
 from route81_spark.jobs.consumer import oplog_order
@@ -133,7 +133,7 @@ def envelope_nation(spark, sf_dir):
     # direct-read envelope golden path: op suppressed, canonical ext-JSON
     # type tags, plain-JSON key (P5-P8)
     df = with_synthetic_id(_t(spark, sf_dir, "nation"), "n_nationkey")
-    env = build_envelope(df, "test.nation", EnvelopeConfig(topic_name_prefix="pfx"))
+    env = build_envelope(df, "test.nation", Config(topic_name_prefix="pfx"))
     return env.select(
         "topic", F.col("key").cast("string").alias("key"), F.col("value").cast("string").alias("value")
     )
@@ -171,7 +171,6 @@ def envelope_roundtrip(spark, sf_dir):
 def cdc_envelope_ops(spark, sf_dir):
     # producer path over the change stream: op codes i/u/d on the wire
     # (README.md:125/139/153), deletes without data
-    from route81_spark.config import Config
     from route81_spark.jobs.producer import envelope_change_stream
 
     ev = synthetic_change_events(spark, sf_dir)
@@ -232,7 +231,7 @@ def envelope_lineitem(spark, sf_dir):
         ensure_parallelism(_t(spark, sf_dir, "lineitem")), "l_orderkey", "l_linenumber"
     )
     env = build_envelope(
-        df, "test.lineitem", EnvelopeConfig(topic_name_prefix="pfx")
+        df, "test.lineitem", Config(topic_name_prefix="pfx")
     )
     # ONE from_json pass over the wire bytes (a get_json_object per
     # projected field would re-parse the 60k-row value string 12x)
@@ -275,7 +274,7 @@ def envelope_lineitem_build(spark, sf_dir):
     df = with_synthetic_id(
         ensure_parallelism(_t(spark, sf_dir, "lineitem")), "l_orderkey", "l_linenumber"
     )
-    return build_envelope(df, "test.lineitem", EnvelopeConfig(topic_name_prefix="pfx"))
+    return build_envelope(df, "test.lineitem", Config(topic_name_prefix="pfx"))
 
 _AVRO_NATION_SPEC = (
     '{"type":"record","name":"nation","fields":['

@@ -23,16 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from route81_spark.config import Config, kafka_options
-from route81_spark.envelope import EnvelopeConfig, ProducerMap, build_envelope, route_topic
+from route81_spark.envelope import build_envelope, route_topic
 from route81_spark.pipeline import apply_pipeline
 from route81_spark.sources.direct_read import direct_read
-
-
-def _envelope_cfg(cfg: Config) -> EnvelopeConfig:
-    return EnvelopeConfig(
-        topic_name_prefix=cfg.topic_name_prefix,
-        producer_maps=[ProducerMap(m.mongo_namespace, m.kafka_topic) for m in cfg.producer_maps],
-    )
 
 
 def namespace_filter(df: DataFrame, cfg: Config, ns_col: str = "ns_full") -> DataFrame:
@@ -106,7 +99,6 @@ def direct_read_job(
     from route81_spark.envelope import with_synthetic_id
 
     out: DataFrame | None = None
-    env_cfg = _envelope_cfg(cfg)
     for ns in cfg.direct_read_namespaces:
         df = producer_source(spark, cfg, ns, table_paths)
         stages = cfg.pipeline_for(ns, stream=False)
@@ -121,7 +113,7 @@ def direct_read_job(
             df = apply_pipeline(df, stages)
         if "_id" not in df.columns:
             df = with_synthetic_id(df, *id_cols[ns])
-        env = build_envelope(df, ns, env_cfg)  # op/ts suppressed: direct read
+        env = build_envelope(df, ns, cfg)  # op/ts suppressed: direct read
         out = env if out is None else out.unionByName(env)
     if out is None:
         raise ValueError("no direct-read-namespaces configured")
@@ -135,8 +127,6 @@ def command_envelope(events: DataFrame, cfg: Config) -> DataFrame:
     no _id header; dropDatabase routes the topic by db name
     (route81.go:1338-1351)."""
     from pyspark.sql import functions as F
-
-    env_cfg = _envelope_cfg(cfg)
     from pyspark.sql import types as T
 
     from route81_spark.envelope import _id_plain_json
@@ -173,7 +163,7 @@ def command_envelope(events: DataFrame, cfg: Config) -> DataFrame:
         key.cast("binary").alias("key"),
         value.cast("binary").alias("value"),
         headers.alias("headers"),
-        route_topic(route_ns, env_cfg).alias("topic"),
+        route_topic(route_ns, cfg).alias("topic"),
     )
 
 
@@ -210,7 +200,7 @@ def envelope_change_stream(events: DataFrame, namespace: str, cfg: Config) -> Da
     doc_records = build_envelope(
         flat,
         namespace,
-        _envelope_cfg(cfg),
+        cfg,
         id_col="__r81_id",
         op_col="__r81_op",
         ts_col="__r81_ts",

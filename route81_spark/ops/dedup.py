@@ -316,7 +316,7 @@ def near_dedup(
 
     Composition of shuffle-minimal pieces: exact = one hash agg;
     candidates = band equi-join; verify = broadcast-pruned Jaccard;
-    clusters = label propagation on the (tiny) verified-pair graph;
+    clusters = connected components of the (tiny) verified-pair graph;
     final filter = broadcast anti-join of the loser set.
 
     `checkpoint_dir` selects reliable (HDFS/disk-file) checkpoints for
@@ -411,16 +411,22 @@ def _star_step(sym: DataFrame, large: bool) -> DataFrame:
 
 def _star_components(edges: DataFrame, ck, max_rounds: int = 64) -> DataFrame:
     """Connected components via alternating large-star/small-star:
-    O(log^2 n) rounds regardless of component *diameter*, which is what
-    makes it the correct fallback when plain min-label propagation hits
-    its round budget on a deep chain. Returns (id, label) with label =
-    component minimum. Edges arrive as (src, dst) pairs; convergence is
-    detected by a (count, hash-sum) signature of the edge multiset —
-    two scalars, no driver-side edge list."""
+    O(log^2 n) rounds regardless of component *diameter*, so a deep
+    chain costs no more rounds than a shallow tree. Returns (id, label)
+    with label = component minimum, one row per node of `edges`.
+    Edges arrive as (src, dst) pairs; convergence is detected by a
+    (count, hash-sum) signature of the edge multiset — two scalars, no
+    driver-side edge list."""
+    nodes = edges.select(F.col("src").alias("id")).unionByName(
+        edges.select(F.col("dst").alias("id"))
+    )
     prev_sig = None
     for _ in range(max_rounds):
-        edges = ck(_star_step(_symmetric(edges), large=True))
-        edges = ck(_star_step(_symmetric(edges), large=False))
+        # one checkpoint per round: the small-star step reads the
+        # large-star output in both edge directions through one reused
+        # shuffle, so a lineage cut in between would only add a job
+        large = _star_step(_symmetric(edges), large=True)
+        edges = ck(_star_step(_symmetric(large), large=False))
         sig = tuple(
             edges.agg(
                 F.count(F.lit(1)),
@@ -434,12 +440,16 @@ def _star_components(edges: DataFrame, ck, max_rounds: int = 64) -> DataFrame:
     else:  # pragma: no cover - log^2 bound makes this unreachable
         raise RuntimeError(f"star contraction did not converge in {max_rounds} rounds")
     # at convergence the graph is a forest of stars centered on each
-    # component minimum: children point at their root; roots self-label
-    kids = edges.select(F.col("src").alias("id"), F.col("dst").alias("label"))
-    roots = (
-        edges.select(F.col("dst").alias("id")).distinct().withColumn("label", F.col("id"))
+    # component minimum: children point at their root (label < id).
+    # Every input node self-labels too and the min keeps the root, so
+    # roots — and nodes whose only edge was a self-loop, which the
+    # steps drop — each get exactly one row
+    return (
+        nodes.select("id", F.col("id").alias("label"))
+        .unionByName(edges.select(F.col("src").alias("id"), F.col("dst").alias("label")))
+        .groupBy("id")
+        .agg(F.min("label").alias("label"))
     )
-    return kids.unionByName(roots)
 
 
 def dedup_against(
@@ -522,11 +532,16 @@ def dedup_against(
     return survivors.join(F.broadcast(losers), id_col, "left_anti")
 
 
+# near_dup_clusters' one routing rule: pair graphs up to this many rows
+# take the driver union-find, every larger one star contraction
+SMALL_GRAPH_MAX_EDGES = 100_000
+
+
 def _collected_components(pairs: DataFrame, rows: list) -> DataFrame:
     """Driver-side union-find over a COLLECTED edge list (small-graph
     fast path of near_dup_clusters). Union-by-min keeps every tree
     rooted at its component minimum, so find(n) IS the cluster label —
-    the same min-reachable-id contract as the distributed loop. Python's
+    the same min-reachable-id contract as star contraction. Python's
     str ordering agrees with Spark's UTF8String comparison (UTF-8 byte
     order preserves code-point order), so labels match for string and
     numeric ids alike."""
@@ -558,125 +573,59 @@ def _collected_components(pairs: DataFrame, rows: list) -> DataFrame:
     return pairs.sparkSession.createDataFrame(data, schema)
 
 
-def near_dup_clusters(
-    pairs: DataFrame,
-    max_iter: int = 20,
-    checkpoint_dir: str | None = None,
-    small_graph_max_edges: int = 100_000,
-) -> DataFrame:
+def near_dup_clusters(pairs: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     """Connected components over near-dup pairs: (doc_id, cluster_id)
     where cluster_id = min doc id reachable through the pair graph —
     the grouping that turns candidate pairs into dedup decisions (keep
-    one representative per cluster).
+    one representative per cluster). Every id of the pair set gets a
+    row, including one whose only pair is a self-loop.
 
-    Iterative min-label propagation. Each round is one join + one
-    aggregation on the *pair set* (orders of magnitude smaller than the
-    corpus); convergence in <= diameter rounds, checked distributed
-    (an agg, no collect of labels). If a component's diameter exceeds
-    `max_iter` (pathological chains), the loop hands off to
-    large-star/small-star contraction (O(log^2 n) rounds, diameter-
-    independent) instead of failing.
+    One rule picks the algorithm: graphs with <= SMALL_GRAPH_MAX_EDGES
+    pair rows run a driver-side union-find over the collected edge
+    list; every larger graph runs large-star/small-star contraction
+    (`_star_components`, O(log^2 n) rounds regardless of component
+    diameter). The verified near-dup pair graph is usually orders of
+    magnitude smaller than the corpus — a few hundred edges at test
+    scale, where distributed rounds cost seconds of pure job scheduling
+    against a graph that fits in one network packet. 100k edges is a
+    few MB on the driver; a corpus with pathological duplication blows
+    past the threshold and takes the distributed path, so there is no
+    scale cliff.
 
-    `checkpoint_dir` switches the per-iteration lineage truncation from
+    `checkpoint_dir` switches the per-round lineage truncation from
     localCheckpoint (executor-local blocks, local-mode default) to
     reliable file checkpoints — required on a real cluster, where an
-    executor lost mid-loop must not lose the only copy of a block.
-
-    Graphs with <= `small_graph_max_edges` pair rows short-circuit to a
-    driver-side union-find over the collected edge list. The verified
-    near-dup pair graph is usually orders of magnitude smaller than the
-    corpus — a few hundred edges at test scale, where 2-5 distributed
-    rounds cost ~1.5 s of pure job-scheduling overhead against a graph
-    that fits in one network packet. 100k edges is a few MB on the
-    driver (far below any realistic driver budget); a 100 TB corpus
-    with pathological duplication blows past the threshold and takes
-    the distributed loop, so there is no scale cliff — set
-    `small_graph_max_edges=0` to force the distributed path."""
-    # persist BEFORE the path decision: both the probe and (on large
-    # graphs) the distributed loop read the cached edge set, so the
-    # expensive upstream candidate/verify lineage executes exactly once
-    # regardless of which path wins
+    executor lost mid-loop must not lose the only copy of a block."""
+    # persist BEFORE the path decision: both the size count and (on
+    # large graphs) the distributed loop read the cached edge set, so
+    # the expensive upstream candidate/verify lineage executes exactly
+    # once regardless of which path wins
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).persist()
-    n_raw: int | None = None
-    if small_graph_max_edges > 0:
-        # Size the graph with ONE aggregation job, then collect from the
-        # cache only when it is provably small. The former
-        # `.limit(N+1).collect()` probe looked cheaper but ran Spark's
-        # incremental CollectLimit — up to ~20 scale-up attempt JOBS per
-        # call on a graph that needed one (r14 job trace: 21 jobs,
-        # ~2.5 s of pure scheduling at sf0.1); a count over the
-        # persisted edges is a single map-side-combined pass at any
-        # scale. The count (and the collected probe) is the RAW pair
-        # row count, not a distinct one: union-find is idempotent under
-        # duplicate edges, so the former distinct() here bought nothing
-        # but an extra exchange + persist per call — a raw count >=
-        # the distinct count only means a borderline graph falls to the
-        # distributed loop, which computes the same labels.
-        n_raw = edges.count()
-        if n_raw <= small_graph_max_edges:
-            probe = edges.collect()
-            edges.unpersist()
-            return _collected_components(pairs, probe)
+    # Size the graph with ONE aggregation job, then collect from the
+    # cache only when it is provably small. A `.limit(N+1).collect()`
+    # probe runs Spark's incremental CollectLimit — up to ~20 scale-up
+    # attempt jobs per call (r14 job trace: 21 jobs, ~2.5 s of pure
+    # scheduling at sf0.1). The count is the RAW pair row count:
+    # union-find is idempotent under duplicate edges, and a raw count >=
+    # the distinct count only sends a borderline graph to the
+    # distributed path, which computes the same labels.
+    n_raw = edges.count()
+    if n_raw <= SMALL_GRAPH_MAX_EDGES:
+        probe = edges.collect()
+        edges.unpersist()
+        return _collected_components(pairs, probe)
     ck = _checkpointer(pairs, checkpoint_dir)
     # Right-size the loop's parallelism to the PAIR GRAPH, not the
-    # corpus: the verified near-dup pairs are orders of magnitude
-    # smaller than the input, and running each round's two tiny joins
-    # through corpus-sized task counts makes per-iteration scheduling
-    # overhead the dominant cost (measured 5.4s -> the count below
-    # picks ~1 partition per 500k edges). The count and the checkpoint
-    # below both read the persisted directed edges — the upstream DAG
-    # (LSH join, shingling, the lot) never re-executes; when the probe
-    # already counted, its result is reused (one fewer job).
-    n_edges = 2 * (n_raw if n_raw is not None else edges.count())
-    parts = max(2, min(32, n_edges // 500_000 + 1))
-    edges_ck = ck(_symmetric(edges).coalesce(parts))
+    # corpus: running each round's tiny shuffles through corpus-sized
+    # task counts makes per-round scheduling the dominant cost (~1
+    # partition per 250k pair rows). The checkpoint reads the persisted
+    # edges, so the upstream DAG never re-executes.
+    parts = max(2, min(32, n_raw // 250_000 + 1))
+    edges_ck = ck(edges.coalesce(parts))
     edges.unpersist()
-    # checkpoint per iteration truncates lineage: otherwise the labels
-    # plan deepens by two joins per round and round N re-executes
-    # rounds 1..N-1 (quadratic work, and a planner blow-up past ~15
-    # rounds). Carrying the previous label through the checkpoint makes
-    # the convergence check a filter over already-materialized blocks —
-    # no extra join per round.
-    #
-    # Round 1 is FUSED into the label initialization: with identity
-    # labels, neighbor-min is just min(dst) per src — one aggregation,
-    # no join and no separate identity-labels checkpoint (two fewer
-    # jobs per call; near-dup graphs usually converge in 2-3 rounds, so
-    # the fixed per-round job cost dominates at interactive scales).
-    labels = ck(
-        edges_ck.groupBy("src").agg(
-            F.least(F.col("src"), F.min("dst")).alias("label")
-        ).select(F.col("src").alias("id"), "label")
-    )
-    converged = False
-    for _ in range(max_iter - 1):
-        neighbor_min = (
-            edges_ck.join(labels, edges_ck["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        stepped = ck(
-            labels.join(neighbor_min, labels["id"] == neighbor_min["src"], "left")
-            .select(
-                "id",
-                F.col("label").alias("__old"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-            )
-        )
-        changed = stepped.filter(F.col("label") != F.col("__old")).limit(1).count()
-        labels = stepped.select("id", "label")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # component diameter exceeds the round budget: contract with the
-        # diameter-independent algorithm instead of returning wrong
-        # (intermediate) labels or raising
-        labels = _star_components(edges_ck, ck)
+    labels = _star_components(edges_ck, ck)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 

@@ -626,8 +626,8 @@ def embedding_dedup(
     al. 2023): bucket the corpus, find within-bucket high-cosine pairs,
     connect them into clusters, keep each cluster's min-id
     representative. Composition of the scale-safe pieces: bucketed
-    self-join (never all-pairs) -> label propagation on the tiny pair
-    graph -> broadcast anti-join of the loser set."""
+    self-join (never all-pairs) -> connected components of the tiny
+    pair graph -> broadcast anti-join of the loser set."""
     from route81_spark.ops.dedup import near_dup_clusters
 
     pairs = embedding_near_dups(emb, threshold, n_dims, id_col, vec_col)

@@ -7,7 +7,7 @@ keeps the suite fast."""
 from __future__ import annotations
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -86,16 +86,20 @@ def test_stratified_sample_fraction_monotone(spark):
 @settings(max_examples=12, deadline=None)
 @given(
     edges=st.lists(
-        st.tuples(st.integers(0, 24), st.integers(0, 24)).filter(lambda p: p[0] != p[1]),
+        st.tuples(st.integers(0, 24), st.integers(0, 24)),
         min_size=1,
         max_size=40,
     ),
-    force_star=st.booleans(),
 )
-def test_clusters_match_union_find(spark, edges, force_star):
-    """near_dup_clusters (label propagation AND the large-star/small-star
-    fallback) must agree with a reference union-find on random graphs."""
-    from route81_spark.ops.dedup import near_dup_clusters
+@example(edges=[(1, 2), (5, 5)])
+def test_clusters_match_union_find(spark, edges):
+    """near_dup_clusters (star contraction AND the small-graph driver
+    union-find) must agree with a reference union-find on random graphs,
+    self-loops included: a node whose only pair is (u, u) still gets
+    its own cluster."""
+    from unittest import mock
+
+    from route81_spark.ops import dedup as D
 
     parent = list(range(25))
 
@@ -116,18 +120,16 @@ def test_clusters_match_union_find(spark, edges, force_star):
     df = spark.createDataFrame(
         [Row(id_a=a, id_b=b) for a, b in edges], "id_a long, id_b long"
     )
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in near_dup_clusters(
-            df, max_iter=1 if force_star else 20, small_graph_max_edges=0
-        ).collect()
-    }
-    assert got == expected
-    # the small-graph driver union-find fast path must agree too
-    fast = {
-        r["doc_id"]: r["cluster_id"] for r in near_dup_clusters(df).collect()
-    }
-    assert fast == expected
+
+    def labels():
+        rows = D.near_dup_clusters(df).collect()
+        assert len(rows) == len(nodes), "one row per node"
+        return {r["doc_id"]: r["cluster_id"] for r in rows}
+
+    # a threshold of 0 forces star contraction on every non-empty graph
+    with mock.patch.object(D, "SMALL_GRAPH_MAX_EDGES", 0):
+        assert labels() == expected
+    assert labels() == expected
 
 
 @settings(max_examples=15, deadline=None)

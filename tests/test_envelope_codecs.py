@@ -15,9 +15,8 @@ from pyspark.sql import Row, functions as F
 
 from route81_spark.codecs.extjson import ext_json_string
 from route81_spark.codecs.plainjson import plain_json_string
+from route81_spark.config import Config, ProducerMapSpec
 from route81_spark.envelope import (
-    EnvelopeConfig,
-    ProducerMap,
     build_envelope,
     route_topic,
     with_synthetic_id,
@@ -98,12 +97,12 @@ def test_direct_read_envelope_has_no_op(spark):
 
 
 def test_producer_map_first_match_wins(spark):
-    cfg = EnvelopeConfig(
+    cfg = Config(
         topic_name_prefix="pfx",
         producer_maps=[
-            ProducerMap("db.c", "exact-topic"),
-            ProducerMap("db", "db-topic"),
-            ProducerMap("", "catch-all"),
+            ProducerMapSpec("db.c", "exact-topic"),
+            ProducerMapSpec("db", "db-topic"),
+            ProducerMapSpec("", "catch-all"),
         ],
     )
     df = spark.createDataFrame(
@@ -118,7 +117,7 @@ def test_producer_map_first_match_wins(spark):
     }
     # no maps: prefix + "." + ns (README.md:236-259)
     df2 = spark.createDataFrame([("db.c",)], "ns string").select(
-        route_topic(F.col("ns"), EnvelopeConfig(topic_name_prefix="pfx")).alias("t")
+        route_topic(F.col("ns"), Config(topic_name_prefix="pfx")).alias("t")
     )
     assert df2.collect()[0]["t"] == "pfx.db.c"
 
@@ -205,7 +204,6 @@ def test_gridfs_golden_messages(spark):
     reference and $binary chunk data."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
-    from route81_spark.envelope import EnvelopeConfig, build_envelope
 
     files_schema = T.StructType(
         [
@@ -238,7 +236,7 @@ def test_gridfs_golden_messages(spark):
     )
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     rec = build_envelope(
-        files, "test.fs.files", EnvelopeConfig(), id_col="_id",
+        files, "test.fs.files", Config(), id_col="_id",
         op_col="op", ts_col="ts",
         data_cols=["_id", "chunkSize", "uploadDate", "length", "md5", "filename"],
         oid_id=True,
@@ -279,7 +277,7 @@ def test_gridfs_golden_messages(spark):
         chunks_schema,
     )
     rec = build_envelope(
-        chunks, "test.fs.chunks", EnvelopeConfig(), id_col="_id",
+        chunks, "test.fs.chunks", Config(), id_col="_id",
         op_col="op", ts_col="ts",
         data_cols=["_id", "files_id", "n", "data"],
         oid_id=True, oid_cols={"files_id"},

@@ -398,12 +398,13 @@ def test_cluster_small_graph_fast_path(spark, tmp_path):
     assert [f.dataType.simpleString() for f in empty.schema.fields] == ["string", "string"]
 
 
-def test_cluster_reliable_checkpoint(spark, tmp_path):
+def test_cluster_reliable_checkpoint(spark, tmp_path, monkeypatch):
     # cluster-mode path: reliable file checkpoints instead of
     # executor-local blocks; same clusters, checkpoint files on disk,
     # and nothing new left in the persistent-RDD map
     import os
 
+    monkeypatch.setattr(D, "SMALL_GRAPH_MAX_EDGES", 0)
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
     pairs = spark.createDataFrame(
         [Row(id_a=i, id_b=i + 1) for i in range(5)]
@@ -411,7 +412,7 @@ def test_cluster_reliable_checkpoint(spark, tmp_path):
         "id_a long, id_b long",
     )
     ckdir = str(tmp_path / "ck")
-    out = D.near_dup_clusters(pairs, checkpoint_dir=ckdir, small_graph_max_edges=0)
+    out = D.near_dup_clusters(pairs, checkpoint_dir=ckdir)
     got = {(r["doc_id"], r["cluster_id"]) for r in out.collect()}
     assert got == {(i, 0) for i in range(6)} | {(10, 10), (11, 10)}
     assert any(files for _, _, files in os.walk(ckdir)), "no checkpoint files written"
@@ -419,18 +420,21 @@ def test_cluster_reliable_checkpoint(spark, tmp_path):
     assert after <= before
 
 
-def test_star_fallback_reliable_checkpoint(spark, tmp_path):
-    # deep chain + reliable checkpoints: the star fallback also runs
-    # through the file-backed checkpointer
+def test_star_fallback_reliable_checkpoint(spark, tmp_path, monkeypatch):
+    # deep chain + reliable checkpoints: star contraction runs through
+    # the file-backed checkpointer and writes its rounds to disk
+    import os
+
+    monkeypatch.setattr(D, "SMALL_GRAPH_MAX_EDGES", 0)
     pairs = spark.createDataFrame(
         [Row(id_a=i, id_b=i + 1) for i in range(9)], "id_a long, id_b long"
     )
-    out = D.near_dup_clusters(
-        pairs, max_iter=1, checkpoint_dir=str(tmp_path / "ck"), small_graph_max_edges=0
-    )
+    ckdir = str(tmp_path / "ck")
+    out = D.near_dup_clusters(pairs, checkpoint_dir=ckdir)
     assert {(r["doc_id"], r["cluster_id"]) for r in out.collect()} == {
         (i, 0) for i in range(10)
     }
+    assert any(files for _, _, files in os.walk(ckdir)), "no checkpoint files written"
 
 
 def test_near_dedup_leaves_no_cached_rdds(spark, tmp_path):
@@ -3105,19 +3109,18 @@ def test_kmv_overlap_sketch_bounds(spark):
     with redirect_stdout(buf):
         kmv_overlap_sketch(docs, other, k=16).explain(mode="simple")
     assert "Scan ExistingRDD" in buf.getvalue()  # sketches checkpointed
-    from pyspark.sql.classic.dataframe import DataFrame as _CDF
+    from unittest import mock
 
-    orig_lc = _CDF.localCheckpoint
-    _CDF.localCheckpoint = lambda self, eager=True: self
-    try:
+    def identity(self, *args, **kwargs):
+        return self
+
+    with mock.patch.object(type(docs), "localCheckpoint", identity):
         buf = io.StringIO()
         with redirect_stdout(buf):
             kmv_overlap_sketch(docs, other, k=16).explain(mode="simple")
-        plan = buf.getvalue()
-        assert "TakeOrderedAndProject" in plan
-        assert "GlobalSort" not in plan and "Sort [h" not in plan
-    finally:
-        _CDF.localCheckpoint = orig_lc
+    plan = buf.getvalue()
+    assert "TakeOrderedAndProject" in plan
+    assert "GlobalSort" not in plan and "Sort [h" not in plan
 
 
 def test_ivfpq_recall_vs_brute_force(spark, sf_dir):

@@ -108,21 +108,20 @@ def test_map_type_envelope_roundtrip(spark):
     assert row["kv"] == {"a": 1, "b": 2}
 
 
-def test_cluster_deep_chain_star_fallback(spark):
-    from route81_spark.ops.dedup import near_dup_clusters
+def test_cluster_deep_chain_star_fallback(spark, monkeypatch):
+    from route81_spark.ops import dedup as D
 
-    # chain 0-1-2-...-9: diameter 9 exceeds max_iter=2, so label
-    # propagation hands off to large-star/small-star (diameter-
-    # independent) instead of raising or returning intermediate labels
+    # chain 0-1-2-...-9 (diameter 9) through the distributed path:
+    # star contraction's round count does not grow with the diameter,
+    # and every node ends labelled with the chain minimum
+    monkeypatch.setattr(D, "SMALL_GRAPH_MAX_EDGES", 0)
     pairs = spark.createDataFrame(
         [Row(id_a=i, id_b=i + 1) for i in range(9)], "id_a long, id_b long"
     )
-    fb = near_dup_clusters(pairs, max_iter=2, small_graph_max_edges=0)
+    fb = D.near_dup_clusters(pairs)
     assert {(r["doc_id"], r["cluster_id"]) for r in fb.collect()} == {
         (i, 0) for i in range(10)
     }
-    ok = near_dup_clusters(pairs, max_iter=15, small_graph_max_edges=0)
-    assert {r["cluster_id"] for r in ok.collect()} == {0}
 
 
 def test_blas_topk_zero_vector_never_ranks(spark):

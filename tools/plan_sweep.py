@@ -5,9 +5,9 @@ flags multi-scan diamonds anywhere in the registry, e.g.
 kmv_overlap_sketch's 12 scans and rare_bigram_stats' dead
 ReusedExchange claim).
 
-Usage: python tools/plan_sweep.py [sf_dir]
-Writes /tmp/plan_sweep.json and prints outliers
-(scans >= 4 or Exchanges >= 8).
+Usage: python tools/plan_sweep.py [sf_dir] [out_file]
+Writes the full table to out_file (default /tmp/plan_sweep.json) and
+prints outliers (scans >= 4 or Exchanges >= 8).
 """
 
 from __future__ import annotations
@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    out_path = sys.argv[2] if len(sys.argv) > 2 else "/tmp/plan_sweep.json"
 
     import __spark_entry__ as entry
     from route81_spark.session import get_spark
@@ -40,7 +41,7 @@ def main() -> int:
             )
         except Exception as e:  # pragma: no cover - sweep robustness
             out[name] = ("ERR", str(e)[:120])
-    with open("/tmp/plan_sweep.json", "w") as f:
+    with open(out_path, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     rows = [
         (n, v)
@@ -52,7 +53,7 @@ def main() -> int:
     rows.sort(key=lambda r: -(r[1][0] if isinstance(r[1][0], int) else 999))
     for n, v in rows:
         print(f"{n:36s} scans={v[0]} exch={v[1]}")
-    print(f"total {len(out)} swept; full table in /tmp/plan_sweep.json")
+    print(f"total {len(out)} swept; full table in {out_path}")
     return 0
 
 
