@@ -233,8 +233,10 @@ def envelope_lineitem(spark, sf_dir):
     env = build_envelope(
         df, "test.lineitem", Config(topic_name_prefix="pfx")
     )
-    # ONE from_json pass over the wire bytes (a get_json_object per
-    # projected field would re-parse the 60k-row value string 12x)
+    # one from_json schema over the wire bytes instead of a
+    # get_json_object per projected field; the executed plan holds one
+    # from_json call per extracted field (10), which subexpression
+    # elimination merges because they are plain getField chains
     wire_schema = (
         "meta struct<_id: string, ns: string,"
         "            ts: struct<`$timestamp`: struct<t: int, i: int>>>,"

@@ -12,7 +12,7 @@ batch — the reference gets this from per-partition consumption order.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -65,27 +65,26 @@ def decode_classify(
     )
 
 
-def merge_classified(table: KeyedParquetTable, classified: DataFrame) -> dict:
-    """Count and merge one batch of classified change rows.
+def merge_classified(table: KeyedParquetTable, classified: DataFrame, **batch) -> dict:
+    """Count and merge one batch of classified change rows; `batch`
+    (batch_id, stream_id) is handed to the sink's merge.
 
     Partial-failure contract (route81.go:1100-1116): a message whose
     document id cannot be extracted is counted as failed and skipped;
     the rest of the batch still applies. Returns {'success': n,
-    'failed': n} for stats accounting."""
-    # persist so the source is scanned ONCE per micro-batch: the stats
-    # count and the merge below share this materialization instead of
-    # each re-running decode+classify
-    classified = classified.persist()
-    try:
-        counts = classified.select(
-            F.count(F.lit(1)).alias("total"),
-            F.count(F.when(F.col("doc_id").isNull(), 1)).alias("failed"),
-        ).collect()[0]
-        good = classified.filter(F.col("doc_id").isNotNull())
-        table.merge(good, seq="seq" if "seq" in classified.columns else None)
-    finally:
-        classified.unpersist()
-    return {"success": int(counts["total"] - counts["failed"]), "failed": int(counts["failed"])}
+    'failed': n} for stats accounting. The counts are observed by the
+    sink's own write of the batch, so counting runs no Spark job; a sink
+    must run the batch's plan once per query (cache it before a plan
+    reads it twice), or the observation is never delivered."""
+    counts = Observation()
+    good = classified.observe(
+        counts,
+        F.count(F.lit(1)).alias("total"),
+        F.count(F.when(F.col("doc_id").isNull(), 1)).alias("failed"),
+    ).filter(F.col("doc_id").isNotNull())
+    table.merge(good, seq="seq" if "seq" in classified.columns else None, **batch)
+    n = counts.get
+    return {"success": n["total"] - n["failed"], "failed": n["failed"]}
 
 
 def apply_consumer_batch(
@@ -184,10 +183,23 @@ def consumer_job(
 
     decode -> classify is applied to the stream itself, so it is planned
     once per stream (Structured Streaming re-runs the plan per trigger);
-    each micro-batch only counts and merges."""
+    each micro-batch only counts and merges.
+
+    Exactly-once: a batch at or below the id the sink recorded for this
+    stream (a replay after a crash between the sink's commit and the
+    stream's) is skipped, counts included. A sink object without
+    `last_batch_id` is merged at least once."""
 
     def on_batch(batch: DataFrame, batch_id: int) -> None:
-        result = merge_classified(table, batch)
+        last_batch_id = getattr(table, "last_batch_id", None)
+        if last_batch_id is None:
+            result = merge_classified(table, batch)
+        else:
+            # the query id: stable across restarts on one checkpoint
+            stream_id = batch.sparkSession.sparkContext.getLocalProperty("sql.streaming.queryId")
+            if batch_id <= last_batch_id(stream_id):
+                return
+            result = merge_classified(table, batch, batch_id=batch_id, stream_id=stream_id)
         if stats is not None:
             stats["success"] = stats.get("success", 0) + result["success"]
             stats["failed"] = stats.get("failed", 0) + result["failed"]

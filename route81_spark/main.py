@@ -152,12 +152,12 @@ def run_consumers(spark, cfg: Config, args, listener=None) -> list:
         else:
             # doc schema from the target table seed (must exist: the
             # merge needs a declared document shape, SURVEY §1.1 option a)
-            doc_schema = table.read().schema if table.exists() else None
-            if doc_schema is None:
+            if not table.exists():
                 raise SystemExit(
-                    f"seed the target table first: "
-                    f"{os.path.join(args.tables_out, spec.mongo_namespace)}/current must exist"
+                    f"seed the target table first: {table.path} needs a keyed table "
+                    f"(KeyedParquetTable.init) or a parquet snapshot in its current/"
                 )
+            doc_schema = table.read().schema
         if cfg.kafka_servers:
             stream = topic_source(spark, cfg, spec, None, None).withColumn("seq", F.col("offset"))
         else:

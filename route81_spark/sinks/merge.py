@@ -10,7 +10,8 @@ Spark-first: the merge itself is a single DataFrame expression —
   new_state = latest-change-per-key  ⟂  (target anti-join changed-keys)
 applied inside foreachBatch for streams or once for batch. At cluster
 scale this becomes Delta `MERGE INTO` on the same (key, is_delete, doc)
-shape; the parquet swap below is the dependency-free harness stand-in.
+shape; the base + delta parquet table below is the dependency-free
+stand-in, with the same per-batch commit record a Delta log keeps.
 Per-key ordering under parallelism comes from ranking by `seq` within
 each key — not from any global sort — so the plan is one hash shuffle
 on the key, no matter how many executors.
@@ -18,12 +19,16 @@ on the key, no matter how many executors.
 
 from __future__ import annotations
 
+import json
+import logging
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+log = logging.getLogger("route81_spark.merge")
 
 
 def latest_per_key(changes: DataFrame, key: str = "doc_id", seq: str = "seq") -> DataFrame:
@@ -105,109 +110,171 @@ def apply_changes(
     return kept.unionByName(upserts, allowMissingColumns=True)
 
 
+# The compaction rule: a merge writes a new base (base, deltas and its
+# own batch resolved in one write) instead of a delta once the committed
+# delta rows exceed this fraction of the base rows.
+COMPACT_FRACTION = 0.25
+MANIFEST = "_manifest.json"
+
+
+def _delta_schema(doc: T.StructType) -> T.StructType:
+    return (
+        T.StructType().add("doc_id", "string").add("is_delete", "boolean").add("doc", doc)
+        .add("seq", "long").add("__v", "long")
+    )
+
+
+def _widen(schema: T.StructType, doc: T.StructType) -> T.StructType:
+    """The table schema plus the document fields it does not have yet
+    (schema drift only ever adds columns)."""
+    names = set(schema.fieldNames())
+    return T.StructType(schema.fields + [f for f in doc.fields if f.name not in names])
+
+
 class KeyedParquetTable:
-    """Mutable keyed table backed by a parquet directory with
-    atomic-rename versioning — the harness stand-in for Delta MERGE /
-    MongoDB bulk writes. Used from foreachBatch.
+    """Mutable keyed table: a base snapshot plus append-only per-batch
+    deltas, all listed in one small manifest — the harness stand-in for
+    a Delta table under MERGE, or MongoDB bulk writes. Used from
+    foreachBatch.
 
-    With `buckets=N` the table is hash-partitioned on the key
-    (`bucket=pmod(xxhash64(key), N)` directories) and a merge rewrites
-    ONLY the buckets that contain changed keys — the same file-pruning
-    property a Delta MERGE gets from data skipping. A CDC batch touching
-    0.1% of keys rewrites ~0.1% of buckets instead of the whole table,
-    which is what makes a keyed sink viable at 100 TB.
+    A merge appends its batch as a delta directory of change rows
+    (`doc_id`, `is_delete`, `doc`, `seq`, and the commit's version `__v`)
+    and commits by `os.replace` of the manifest, so its cost tracks the
+    batch, not the table: it never reads the target. `read()` resolves
+    base ∪ deltas per key by (`__v`, `seq`) with one per-key ranking
+    (`apply_changes`). Compaction follows one rule: once the committed
+    delta rows pass COMPACT_FRACTION of the base rows, the next merge
+    writes a new base resolved from base ∪ deltas ∪ its own batch in
+    one write, instead of a delta.
 
-    The table carries the schema of the files it last wrote (`init` and
-    every `merge` record it), so reads pass it to the reader and run no
-    schema-inference job; an object opened over an existing path infers
-    it once, on its first read."""
+    The manifest also carries the table schema (widened when documents
+    add fields), so no read runs a schema-inference job, and the last
+    applied streaming batch id per stream (`last_batch_id`), which makes
+    the consumer exactly-once: a replayed batch is skipped. A crash
+    before the replace leaves the previous manifest, whose files are
+    untouched; files it does not list are deleted after each commit.
 
-    def __init__(self, spark: SparkSession, path: str, key: str = "_id", buckets: int = 0):
+    A directory holding a parquet snapshot in `current/` and no manifest
+    (the layout before the manifest) opens as a base with no deltas."""
+
+    def __init__(self, spark: SparkSession, path: str, key: str = "_id"):
         self.spark = spark
         self.path = path
         self.key = key
-        self.buckets = buckets
-        self._schema: T.StructType | None = None
+        self._legacy: dict | None = None
 
-    @property
-    def _current(self) -> str:
-        return os.path.join(self.path, "current")
+    def _file(self, name: str) -> str:
+        return os.path.join(self.path, name)
 
     def exists(self) -> bool:
-        return os.path.isdir(self._current)
+        return os.path.isfile(self._file(MANIFEST)) or os.path.isdir(self._file("current"))
 
-    def _scan(self) -> DataFrame:
-        """The files under current/ as written (with the `bucket`
-        partition column when bucketed)."""
-        if self._schema is None:
-            self._schema = self.spark.read.parquet(self._current).schema
-        return self.spark.read.schema(self._schema).parquet(self._current)
+    def _manifest(self) -> dict:
+        """The committed manifest; for a `current/` table, one built from
+        its files (schema and row count read once per object)."""
+        try:
+            with open(self._file(MANIFEST)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            if self._legacy is None:
+                base = self.spark.read.parquet(self._file("current"))
+                self._legacy = {
+                    "version": 0, "base": "current", "base_rows": base.count(), "deltas": [],
+                    "schema": base.schema.jsonValue(), "batches": {},
+                }
+            return self._legacy
+
+    def last_batch_id(self, stream_id: str) -> int:
+        """The last streaming batch id committed by `stream_id`, -1 if none."""
+        return self._manifest()["batches"].get(stream_id, -1)
+
+    def _resolve(self, m: dict, schema: T.StructType, batch: DataFrame | None = None) -> DataFrame:
+        base = self.spark.read.schema(schema).parquet(self._file(m["base"]))
+        changes = None
+        if m["deltas"]:
+            changes = self.spark.read.schema(_delta_schema(schema)).parquet(
+                *[self._file(d) for d, _ in m["deltas"]]
+            )
+        if batch is not None:
+            changes = batch if changes is None else changes.unionByName(batch, allowMissingColumns=True)
+        if changes is None:
+            return base
+        return apply_changes(
+            base, changes.withColumn("__order", F.struct("__v", "seq")),
+            seq="__order", target_key=self.key,
+        )
 
     def read(self) -> DataFrame:
-        df = self._scan()
-        return df.drop("bucket") if self.buckets else df
+        m = self._manifest()
+        return self._resolve(m, T.StructType.fromJson(m["schema"]))
 
-    def _bucket_of(self, col) -> "F.Column":
-        return F.pmod(F.xxhash64(col.cast("string")), F.lit(self.buckets)).cast("int")
+    def _write(self, df: DataFrame, name: str) -> int:
+        """Write df to <path>/<name>; returns its row count, observed by
+        the write job itself."""
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
+            self._file(name)
+        )
+        return obs.get["n"]
 
-    def _write(self, df: DataFrame, path: str) -> None:
-        """Overwrite `path` with df and record df's schema as the
-        table's."""
-        writer = df.write.mode("overwrite")
-        if self.buckets:
-            writer = writer.partitionBy("bucket")
-        writer.parquet(path)
-        self._schema = df.schema
+    def _commit(self, m: dict) -> None:
+        """Atomically replace the manifest, then delete what it no longer
+        lists. A failed delete is left for the next commit."""
+        tmp = self._file(MANIFEST + ".tmp")
+        with open(tmp, "w") as f:
+            json.dump(m, f)
+        os.replace(tmp, self._file(MANIFEST))
+        live = {m["base"], *(d for d, _ in m["deltas"])}
+        for name in os.listdir(self.path):
+            if name not in live and (name == "current" or name.startswith(("base-", "delta-"))):
+                try:
+                    shutil.rmtree(self._file(name))
+                except OSError as e:
+                    log.warning("could not delete superseded %s: %s", self._file(name), e)
 
     def init(self, df: DataFrame) -> None:
         os.makedirs(self.path, exist_ok=True)
-        if self.buckets:
-            df = df.withColumn("bucket", self._bucket_of(F.col(self.key)))
-        self._write(df, self._current)
+        version = self._manifest()["version"] + 1 if os.path.isfile(self._file(MANIFEST)) else 0
+        name = f"base-{version:06d}"
+        m = {"version": version, "base": name, "deltas": [], "schema": df.schema.jsonValue()}
+        self._commit({**m, "base_rows": self._write(df, name), "batches": {}})
 
-    def merge(self, changes: DataFrame, seq: str | None = "seq") -> None:
-        """changes: doc_id, is_delete, doc struct (+ optional seq)."""
-        if self.buckets:
-            self._merge_bucketed(changes, seq)
-            return
-        new_state = apply_changes(self.read(), changes, seq=seq, target_key=self.key)
-        tmp = os.path.join(self.path, "next")
-        self._write(new_state, tmp)
-        old = self._current
-        swap = os.path.join(self.path, "prev")
-        if os.path.isdir(swap):
-            shutil.rmtree(swap)
-        os.rename(old, swap)
-        os.rename(tmp, old)
-        shutil.rmtree(swap)
-
-    def _merge_bucketed(self, changes: DataFrame, seq: str | None) -> None:
-        """Rewrite only the buckets containing changed keys, via dynamic
-        partition overwrite (non-touched bucket directories are left
-        untouched on disk)."""
-        changes = changes.withColumn("bucket", self._bucket_of(F.col("doc_id")))
-        touched = [r["bucket"] for r in changes.select("bucket").distinct().collect()]
-        if not touched:
-            return
-        current = self._scan().filter(F.col("bucket").isin(touched))
-        new_state = apply_changes(
-            current.drop("bucket"), changes.drop("bucket"), seq=seq, target_key=self.key
+    def merge(
+        self, changes: DataFrame, seq: str | None = "seq", batch_id: int | None = None, stream_id: str = ""
+    ) -> None:
+        """changes: doc_id, is_delete, doc struct (+ optional seq).
+        Without `seq`, one change per key per batch is assumed. With a
+        `batch_id`, the commit records it as `stream_id`'s last applied
+        batch; the caller skips a batch at or below `last_batch_id`."""
+        m = self._manifest()
+        version = m["version"] + 1
+        schema = _widen(T.StructType.fromJson(m["schema"]), changes.schema["doc"].dataType)
+        order = F.col(seq) if seq is not None and seq in changes.columns else F.lit(None)
+        batch = changes.select(
+            F.col("doc_id").cast("string").alias("doc_id"),
+            "is_delete",
+            "doc",
+            order.cast("long").alias("seq"),
+            F.lit(version).cast("long").alias("__v"),
         )
-        out = new_state.withColumn("bucket", self._bucket_of(F.col(self.key)))
-        # write the new versions of the touched buckets to a scratch dir
-        # (cannot overwrite the path being read), then swap exactly those
-        # bucket directories; untouched buckets are never rewritten
-        tmp = os.path.join(self.path, "next")
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        self._write(out, tmp)
-        for b in touched:
-            cur_b = os.path.join(self._current, f"bucket={b}")
-            new_b = os.path.join(tmp, f"bucket={b}")
-            if os.path.isdir(cur_b):
-                shutil.rmtree(cur_b)
-            if os.path.isdir(new_b):
-                # bucket still has rows; an all-deleted bucket simply
-                # stays removed so deletes are not resurrected
-                os.rename(new_b, cur_b)
-        shutil.rmtree(tmp, ignore_errors=True)
+        delta_rows = sum(n for _, n in m["deltas"])
+        if delta_rows > COMPACT_FRACTION * m["base_rows"]:
+            name = f"base-{version:06d}"
+            # the resolve reads the batch twice (keys and rows): cache it
+            # first, so the batch's own plan (and what it observes) runs
+            # once, in one job
+            batch = batch.persist()
+            try:
+                batch.count()
+                rows = self._write(self._resolve(m, schema, batch), name)
+            finally:
+                batch.unpersist()
+            log.info("compacted %s: %d delta rows into %s (%d rows)", self.path, delta_rows, name, rows)
+            m = {**m, "base": name, "base_rows": rows, "deltas": []}
+        else:
+            name = f"delta-{version:06d}"
+            m = {**m, "deltas": m["deltas"] + [[name, self._write(batch, name)]]}
+        batches = dict(m["batches"])
+        if batch_id is not None:
+            batches[stream_id] = batch_id
+        self._commit({**m, "version": version, "schema": schema.jsonValue(), "batches": batches})

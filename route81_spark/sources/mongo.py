@@ -284,7 +284,14 @@ class MongoKeyedSink:
         deletes = changes.filter(F.col("is_delete")).select("doc_id")
         return upserts, deletes
 
-    def merge(self, changes: DataFrame, seq: str | None = "seq") -> None:  # pragma: no cover - live only
+    def last_batch_id(self, stream_id: str) -> int:
+        """No batch record: replace and delete by _id are idempotent, so
+        a replayed batch is applied again."""
+        return -1
+
+    def merge(
+        self, changes: DataFrame, seq: str | None = "seq", batch_id: int | None = None, stream_id: str = ""
+    ) -> None:  # pragma: no cover - live only
         changes = changes.persist()
         try:
             upserts, deletes = self.split(changes, seq)

@@ -400,3 +400,49 @@ def test_consumer_stream_jobs_per_batch(spark, tmp_path):
     assert len(got) == 50 and got["k39"] == 103 and got["k40"] == 40
     # the first batch also plans the stream; later batches are steady state
     assert max(jobs[1:]) <= 6, jobs
+
+
+def test_consumer_stream_jobs_per_delta_batch(spark, tmp_path):
+    """A consumer micro-batch below the compaction rule runs 1 Spark job:
+    the delta write, which also observes the success/failed counts; it
+    never reads the target. A compacting batch stays within 6."""
+    from route81_spark.config import ConsumerSpec
+    from route81_spark.jobs.consumer import consumer_job
+    from route81_spark.sinks.merge import MANIFEST
+
+    doc_schema = _doc_schema()
+    path = tmp_path / "t"
+    table = KeyedParquetTable(spark, str(path))
+    table.init(spark.createDataFrame([(f"k{j}", j) for j in range(50)], doc_schema))
+    topic = tmp_path / "topic"
+    topic.mkdir()
+    record_schema = "value binary, seq long"
+    spec = ConsumerSpec(
+        kafka_topics=["t"], mongo_namespace="db.c", document_root_path="data",
+        bulk_flush_seconds=0,
+    )
+    stream = spark.readStream.schema(record_schema).parquet(str(topic))
+    cq = consumer_job(spark, spec, stream, table, doc_schema, str(tmp_path / "ckpt"))
+    tracker = spark.sparkContext.statusTracker()
+    group = str(cq.runId)
+    delta, compacting = [], []
+    try:
+        for step in range(6):
+            rows = [
+                (_ext_record(f"k{step * 10 + j}", step + 1, j, 100 + step), step * 100 + j)
+                for j in range(10)
+            ]
+            spark.createDataFrame(rows, record_schema).coalesce(1).write.mode("append").parquet(
+                str(topic)
+            )
+            before = set(tracker.getJobIdsForGroup(group))
+            cq.processAllAvailable()
+            n = len(set(tracker.getJobIdsForGroup(group)) - before)
+            if step:
+                deltas = json.loads((path / MANIFEST).read_text())["deltas"]
+                (delta if deltas else compacting).append(n)
+    finally:
+        cq.stop()
+    assert delta and compacting, (delta, compacting)
+    assert set(delta) == {1}, delta
+    assert max(compacting) <= 6, compacting

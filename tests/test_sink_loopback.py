@@ -104,40 +104,34 @@ def test_loopback_three_phases(spark, tmp_path):
     assert table.read().count() == 0
 
 
-def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
+def test_merge_writes_only_the_batch(spark, tmp_path):
+    """A merge below the compaction rule appends its batch as one delta
+    and never rewrites the base: the cost tracks the batch, not the
+    table."""
     import os
 
-    n, buckets = 200, 16
+    n = 200
     src = spark.range(n).select(
         F.col("id").cast("string").alias("_id"), F.col("id").cast("int").alias("i")
     )
-    table = KeyedParquetTable(spark, str(tmp_path / "bt"), buckets=buckets)
+    path = tmp_path / "t"
+    table = KeyedParquetTable(spark, str(path))
     table.init(src)
-    assert table.read().count() == n
-
-    # record file mtimes per bucket dir before the merge
-    cur = str(tmp_path / "bt" / "current")
-    before = {d: os.path.getmtime(os.path.join(cur, d)) for d in os.listdir(cur) if d.startswith("bucket=")}
+    base = {p: os.path.getmtime(p) for p in path.glob("base-*/*.parquet")}
+    assert base
 
     # change 3 keys: update "7", delete "8", insert "999"
-    changes = spark.createDataFrame(
-        [
-            ("7", False, ("7", 700), 1),
-            ("8", True, None, 1),
-            ("999", False, ("999", 999), 1),
-        ],
-        "doc_id string, is_delete boolean, doc struct<_id:string,i:int>, seq int",
+    table.merge(
+        _keyed_changes(spark, [("7", False, ("7", 700), 1), ("8", True, None, 1), ("999", False, ("999", 999), 1)])
     )
-    table.merge(changes)
 
     got = {r["_id"]: r["i"] for r in table.read().collect()}
     assert len(got) == n  # -1 delete +1 insert
     assert got["7"] == 700 and "8" not in got and got["999"] == 999
-
-    after = {d: os.path.getmtime(os.path.join(cur, d)) for d in os.listdir(cur) if d.startswith("bucket=")}
-    untouched = [d for d in before if before[d] == after.get(d)]
-    # at most 3 buckets were rewritten; the rest must be byte-identical dirs
-    assert len(untouched) >= buckets - 3
+    assert {p: os.path.getmtime(p) for p in path.glob("base-*/*.parquet")} == base
+    deltas = sorted(path.glob("delta-*"))
+    assert len(deltas) == 1
+    assert spark.read.parquet(str(deltas[0])).count() == 3
 
 
 def test_namespace_feedback_loop_filter(spark):
@@ -253,11 +247,23 @@ def _keyed_changes(spark, rows, doc="struct<_id:string,i:int>"):
     )
 
 
-def test_bucketed_table_from_empty_frame(spark, tmp_path):
-    """A bucketed table initialised from an empty frame has no bucket
-    directories to infer a schema from; its first merge and read use
-    the schema it recorded at init."""
-    table = KeyedParquetTable(spark, str(tmp_path / "bt"), buckets=4)
+def _jobs_during(spark, fn):
+    """Spark jobs run by fn(), counted through a job group."""
+    sc = spark.sparkContext
+    group = f"probe-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_keyed_table_from_empty_frame(spark, tmp_path):
+    """A table initialised from an empty frame has no data files to
+    infer a schema from; its merges and reads use the schema the
+    manifest recorded at init."""
+    table = KeyedParquetTable(spark, str(tmp_path / "t"))
     table.init(spark.createDataFrame([], "_id string, i int"))
     assert table.read().count() == 0
     table.merge(_keyed_changes(spark, [("a", False, ("a", 1), 1), ("b", False, ("b", 2), 1)]))
@@ -266,35 +272,97 @@ def test_bucketed_table_from_empty_frame(spark, tmp_path):
     assert table.read().columns == ["_id", "i"]
 
 
-@pytest.mark.parametrize("buckets", [0, 4])
-def test_keyed_table_reopened_over_existing_path(spark, tmp_path, buckets):
+_WIDE = "struct<_id:string,i:int,extra:string>"
+
+
+@pytest.mark.parametrize("merges", [0, 4])
+def test_keyed_table_reopened_over_existing_path(spark, tmp_path, merges):
     """A fresh object over a table another object wrote (a daemon
-    restart) infers the schema once and merges correctly."""
+    restart) takes the schema from the manifest, so opening and reading
+    it runs no inference job, and merges correctly. The first object
+    widens the table and then commits `merges` narrow batches; on this
+    2-row table 4 of them pass the compaction rule, so the drift has
+    to survive a compaction and a reopen."""
     path = str(tmp_path / "t")
-    first = KeyedParquetTable(spark, path, buckets=buckets)
+    first = KeyedParquetTable(spark, path)
     first.init(spark.createDataFrame([("a", 1), ("b", 2)], "_id string, i int"))
-    first.merge(_keyed_changes(spark, [("b", False, ("b", 20), 1)]))
+    first.merge(_keyed_changes(spark, [("b", False, ("b", 20, "x"), 1)], doc=_WIDE))
+    for j in range(merges):
+        first.merge(_keyed_changes(spark, [(f"n{j}", False, (f"n{j}", j), 10 + j)]))
 
-    reopened = KeyedParquetTable(spark, path, buckets=buckets)
-    reopened.merge(_keyed_changes(spark, [("a", True, None, 2), ("c", False, ("c", 3), 2)]))
-    assert sorted(tuple(r) for r in reopened.read().collect()) == [("b", 20), ("c", 3)]
+    reopened = KeyedParquetTable(spark, path)
+    assert _jobs_during(spark, lambda: reopened.read().columns) == 0
+    reopened.merge(_keyed_changes(spark, [("a", True, None, 20), ("c", False, ("c", 3), 20)]))
+    assert sorted(tuple(r) for r in reopened.read().collect()) == sorted(
+        [("b", 20, "x"), ("c", 3, None)] + [(f"n{j}", j, None) for j in range(merges)]
+    )
 
 
-@pytest.mark.parametrize("buckets", [0, 4])
-def test_keyed_table_schema_drift_in_one_process(spark, tmp_path, buckets):
+@pytest.mark.parametrize("merges", [0, 4])
+def test_keyed_table_schema_drift_in_one_process(spark, tmp_path, merges):
     """A merge whose documents add a field widens the table, and the
-    same object's next read returns that field (null for old rows)."""
-    table = KeyedParquetTable(spark, str(tmp_path / "t"), buckets=buckets)
+    same object's next read returns that field (null for old rows).
+    `merges` later batches without the field keep it: 4 of them pass
+    the compaction rule on this 2-row table."""
+    table = KeyedParquetTable(spark, str(tmp_path / "t"))
     table.init(spark.createDataFrame([("a", 1), ("b", 2)], "_id string, i int"))
     assert table.read().columns == ["_id", "i"]
-    table.merge(
-        _keyed_changes(
-            spark, [("c", False, ("c", 3, "new"), 1)], doc="struct<_id:string,i:int,extra:string>"
-        )
-    )
+    table.merge(_keyed_changes(spark, [("c", False, ("c", 3, "new"), 1)], doc=_WIDE))
+    for j in range(merges):
+        table.merge(_keyed_changes(spark, [(f"n{j}", False, (f"n{j}", j), 10 + j)]))
     got = table.read()
     assert got.columns == ["_id", "i", "extra"]
-    assert sorted(tuple(r) for r in got.collect()) == [("a", 1, None), ("b", 2, None), ("c", 3, "new")]
+    assert sorted(tuple(r) for r in got.collect()) == sorted(
+        [("a", 1, None), ("b", 2, None), ("c", 3, "new")] + [(f"n{j}", j, None) for j in range(merges)]
+    )
+
+
+def test_compaction_matches_apply_changes(spark, tmp_path):
+    """Batches merged past the compaction rule resolve to the rows that
+    folding apply_changes over the same batches gives: keys updated,
+    deleted and re-inserted across batches and within one batch (by
+    seq), with deltas on both sides of a compaction."""
+    import json
+    import random
+
+    from route81_spark.sinks.merge import MANIFEST
+
+    rng = random.Random(7)
+    seed = [(f"k{j}", j) for j in range(40)]
+    table = KeyedParquetTable(spark, str(tmp_path / "t"))
+    table.init(spark.createDataFrame(seed, "_id string, i int"))
+    model = spark.createDataFrame(seed, "_id string, i int")
+    bases = set()
+    for b in range(8):
+        rows = []
+        for j in range(6):
+            k = f"k{rng.randrange(60)}"
+            rows.append((k, True, None, j) if rng.random() < 0.3 else (k, False, (k, 100 * b + j), j))
+        changes = _keyed_changes(spark, rows)
+        table.merge(changes)
+        model = spark.createDataFrame(apply_changes(model, changes).collect(), "_id string, i int")
+        bases.add(json.loads((tmp_path / "t" / MANIFEST).read_text())["base"])
+        assert sorted(tuple(r) for r in table.read().collect()) == sorted(tuple(r) for r in model.collect())
+    assert len(bases) >= 3  # compacted at least twice
+
+
+def test_legacy_current_table(spark, tmp_path):
+    """A table directory holding a parquet snapshot in current/ and no
+    manifest (the layout before the manifest) opens, reads and merges;
+    its first compaction moves it to a manifest base."""
+    path = tmp_path / "t"
+    spark.createDataFrame([("a", 1), ("b", 2)], "_id string, i int").write.parquet(str(path / "current"))
+    table = KeyedParquetTable(spark, str(path))
+    assert table.exists()
+    assert sorted(tuple(r) for r in table.read().collect()) == [("a", 1), ("b", 2)]
+    table.merge(_keyed_changes(spark, [("a", True, None, 1), ("c", False, ("c", 3), 1)]))
+    assert sorted(tuple(r) for r in table.read().collect()) == [("b", 2), ("c", 3)]
+    assert (path / "current").is_dir()
+    table.merge(_keyed_changes(spark, [("b", False, ("b", 20), 2)]))
+    assert sorted(tuple(r) for r in table.read().collect()) == [("b", 20), ("c", 3)]
+    assert not (path / "current").exists()
+    reopened = KeyedParquetTable(spark, str(path))
+    assert sorted(tuple(r) for r in reopened.read().collect()) == [("b", 20), ("c", 3)]
 
 
 def test_apply_changes_schema_drift(spark):

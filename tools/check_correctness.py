@@ -36,6 +36,11 @@ def main() -> int:
     import __spark_entry__ as entry
     from route81_spark.session import get_spark
 
+    qs = entry.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"not registered queries: {' '.join(unknown)}")
+        return 2
     spark = get_spark("correctness", 8)
     con = duckdb.connect()
     for t in TABLES:
@@ -43,12 +48,13 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
+    ran = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        ran += 1
         try:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
@@ -89,7 +95,7 @@ def main() -> int:
             failures.append(name)
             msg = str(e).splitlines()
             print(f"FAIL {name}: values differ: " + " | ".join(msg[:6]))
-    print(f"\n{len(qs) - len(failures)}/{len(qs)} pass")
+    print(f"\n{ran - len(failures)}/{ran} pass")
     return 1 if failures else 0
 
 
