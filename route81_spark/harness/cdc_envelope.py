@@ -21,7 +21,7 @@ from ._shared import _q, _t
 def plainjson_roundtrip(spark, sf_dir):
     # P9 plain-JSON encode -> P11 json-format decode = identity
     from route81_spark.codecs.plainjson import plain_json_string
-    from route81_spark.model.schemas import envelope_schema
+    from route81_spark.envelope import envelope_schema
 
     df = with_synthetic_id(_t(spark, sf_dir, "region"), "r_regionkey")
     doc = F.struct(*[F.col(c) for c in df.columns])
@@ -145,7 +145,7 @@ def envelope_nation(spark, sf_dir):
 def envelope_roundtrip(spark, sf_dir):
     # producer encode -> consumer decode must be the identity on the
     # document (P8 encode ∘ P11 decode = id), proving both codecs at once
-    from route81_spark.model.schemas import decode_envelope
+    from route81_spark.envelope import decode_envelope
 
     df = with_synthetic_id(_t(spark, sf_dir, "nation"), "n_nationkey")
     env = build_envelope(df, "test.nation")
@@ -310,11 +310,11 @@ def avro_roundtrip(spark, sf_dir):
       FROM events
       UNION ALL
       SELECT CAST(event_id AS VARCHAR),
-             10000000000 + event_id, FALSE, value * 2
+             4294967296 + event_id, FALSE, value * 2
       FROM events WHERE event_id % 10 = 0
       UNION ALL
       SELECT CAST(event_id AS VARCHAR),
-             20000000000 + event_id, TRUE, NULL
+             8589934592 + event_id, TRUE, NULL
       FROM events WHERE event_id % 25 = 0
     ),
     h AS (
@@ -342,7 +342,7 @@ def cdc_scd2_history(spark, sf_dir):
         F.col("documentKey._id").alias("doc_id"),
         (F.col("operationType") == "delete").alias("is_delete"),
         F.col("fullDocument.value").alias("value"),
-        (F.col("clusterTime.t") * F.lit(10_000_000_000) + F.col("clusterTime.i")).alias("seq"),
+        oplog_order(F.col("clusterTime.t"), F.col("clusterTime.i")).alias("seq"),
     )
     h = scd2_history(changes)
     return h.select(

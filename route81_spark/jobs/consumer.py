@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from route81_spark.config import Config, ConsumerSpec, kafka_options
-from route81_spark.model.schemas import decode_envelope
+from route81_spark.envelope import envelope_fields, envelope_ts, parse_envelope
 from route81_spark.sinks.classify import ClassifierConfig, classify
 from route81_spark.sinks.merge import KeyedParquetTable
 
@@ -26,14 +26,10 @@ def decode_records(
     records: DataFrame, spec: ConsumerSpec, doc_schema: T.StructType
 ) -> DataFrame:
     """Kafka records (key/value/...) -> decoded message rows. Selects the
-    decoder by message-format (route81.go:717-727)."""
-    if spec.message_format == "json-ext":
-        decoded = decode_envelope(F.col("value"), doc_schema)
-    elif spec.message_format == "json":
-        from route81_spark.model.schemas import envelope_schema
-
-        decoded = F.from_json(F.col("value").cast("string"), envelope_schema(doc_schema))
-    elif spec.message_format == "avro":
+    decoder by message-format (route81.go:717-727). json and json-ext
+    parse each value once into its own column, then extract the fields
+    from that column."""
+    if spec.message_format == "avro":
         from route81_spark.codecs.avro import decode_avro_records
 
         # avro-binary toggle (route81.go:108, route81.go:718-722):
@@ -41,12 +37,14 @@ def decode_records(
         return decode_avro_records(
             records, spec.avro_schema_spec, binary=spec.avro_binary
         )
-    else:
+    if spec.message_format not in ("json", "json-ext"):
         raise ValueError(f"bad message-format: {spec.message_format}")
-    cols = [decoded.alias("msg")]
-    if "seq" in records.columns:
-        cols.append(F.col("seq"))
-    return records.select(*cols).select("msg.*", *(["seq"] if "seq" in records.columns else []))
+    tagged = spec.message_format == "json-ext"
+    seq = ["seq"] if "seq" in records.columns else []
+    parsed = records.select(
+        parse_envelope(F.col("value"), doc_schema, tagged).alias("msg"), *seq
+    )
+    return parsed.select(*envelope_fields(F.col("msg"), doc_schema, tagged), *seq)
 
 
 def decode_classify(
@@ -108,19 +106,8 @@ def oplog_order(t: Column, i: Column) -> Column:
 
 def oplog_seq(value_col: Column) -> Column:
     """Per-key ordering key from an ext-JSON envelope's oplog timestamp
-    (meta.ts.$timestamp {t, i}), by `oplog_order`."""
-    ts_type = T.StructType([T.StructField("t", T.LongType()), T.StructField("i", T.LongType())])
-    seq_schema = T.StructType(
-        [
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [T.StructField("ts", T.StructType([T.StructField("$timestamp", ts_type)]))]
-                ),
-            )
-        ]
-    )
-    ts = F.from_json(value_col.cast("string"), seq_schema)["meta"]["ts"]["$timestamp"]
+    (meta.ts), by `oplog_order`."""
+    ts = envelope_ts(value_col)
     return oplog_order(ts.getField("t"), ts.getField("i"))
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from route81_spark.config import Config, kafka_options
-from route81_spark.envelope import build_envelope, route_topic
+from route81_spark.envelope import build_command_envelope, build_envelope
 from route81_spark.pipeline import apply_pipeline
 from route81_spark.sources.direct_read import direct_read
 
@@ -120,53 +120,6 @@ def direct_read_job(
     return out
 
 
-def command_envelope(events: DataFrame, cfg: Config) -> DataFrame:
-    """Command events (drop / dropDatabase) -> kafka records with the
-    reference's command contract (route81.go:1353-1374, 1383-1398):
-    key = namespace (db name only for dropDatabase), op = 'c', no data,
-    no _id header; dropDatabase routes the topic by db name
-    (route81.go:1338-1351)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from route81_spark.envelope import _id_plain_json
-
-    ns_full = F.concat_ws(".", F.col("ns.db"), F.col("ns.coll"))
-    route_ns = F.when(F.col("operationType") == "dropDatabase", F.col("ns.db")).otherwise(ns_full)
-    # command keys go through the JSON meta encoder -> quoted string
-    # (route81.go:1362-1371 getMsgKey: enc.Encode(namespace))
-    key = _id_plain_json(
-        F.when(F.col("operationType") == "dropDatabase", F.col("ns.db")).otherwise(ns_full),
-        T.StringType(),
-    )
-    ts_plain = F.to_json(
-        F.struct(F.col("clusterTime.t").alias("T"), F.col("clusterTime.i").alias("I"))
-    )
-    value = F.to_json(
-        F.struct(
-            F.struct(
-                F.struct(
-                    F.struct(
-                        F.col("clusterTime.t").alias("t"), F.col("clusterTime.i").alias("i")
-                    ).alias("$timestamp")
-                ).alias("ts"),
-                ns_full.alias("ns"),
-                F.lit("c").alias("op"),
-            ).alias("meta")
-        )
-    )
-    headers = F.array(
-        F.struct(F.lit("ts").alias("key"), ts_plain.cast("binary").alias("value")),
-        F.struct(F.lit("ns").alias("key"), ns_full.cast("binary").alias("value")),
-    )
-    return events.select(
-        key.cast("binary").alias("key"),
-        value.cast("binary").alias("value"),
-        headers.alias("headers"),
-        route_topic(route_ns, cfg).alias("topic"),
-    )
-
-
 def envelope_change_stream(events: DataFrame, namespace: str, cfg: Config) -> DataFrame:
     """Change-event rows (F1 schema) -> kafka-record rows with op codes
     i/u/d (README.md:125/139/153) and updates {removed, changed}.
@@ -182,7 +135,10 @@ def envelope_change_stream(events: DataFrame, namespace: str, cfg: Config) -> Da
         events = apply_pipeline(events, stages)
     commands = events.filter(F.col("operationType").isin("drop", "dropDatabase"))
     events = events.filter(~F.col("operationType").isin("drop", "dropDatabase"))
-    cmd_records = command_envelope(commands, cfg)
+    ns_full = F.concat_ws(".", F.col("ns.db"), F.col("ns.coll"))
+    # dropDatabase is keyed and routed by its db name (route81.go:1338-1374)
+    route_ns = F.when(F.col("operationType") == "dropDatabase", F.col("ns.db")).otherwise(ns_full)
+    cmd_records = build_command_envelope(commands, ns_full, route_ns, "clusterTime", cfg)
     # the key id gets a reserved name: fullDocument.* usually also
     # carries `_id`, which must stay a data column
     flat = events.select(

@@ -1,7 +1,3 @@
-from route81_spark.model.schemas import (
-    change_event_schema,
-    envelope_schema,
-    decode_envelope,
-)
+from route81_spark.model.schemas import TS_TYPE, change_event_schema
 
-__all__ = ["change_event_schema", "envelope_schema", "decode_envelope"]
+__all__ = ["TS_TYPE", "change_event_schema"]

@@ -1,19 +1,10 @@
-"""Schemas of SURVEY §1: change events (F1), the Kafka envelope (F3),
-and the envelope decoder used by the consumer path.
-
-The envelope is `{meta:{_id, ts, ns, op, updates}, data}`
-(/root/reference/route81.go:56-67); on the wire it is canonical
-ext-JSON, so decoding parses the *tagged* schema and strips tags back
-to declared types (codecs.extjson) — all JVM-side from_json work, no
-Python in the stream."""
+"""Schemas of SURVEY §1: the change events (F1) the producer reads, and
+the oplog timestamp type they share with the envelope (F3), whose
+schemas and codec live in route81_spark.envelope."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from route81_spark.codecs.extjson import ext_json_tagged_schema, strip_ext_json
 
 TS_TYPE = T.StructType([T.StructField("t", T.LongType()), T.StructField("i", T.LongType())])
 
@@ -45,86 +36,3 @@ def change_event_schema(doc_schema: T.StructType) -> T.StructType:
             T.StructField("updateDescription", UPDATE_DESCRIPTION_TYPE),
         ]
     )
-
-
-def envelope_schema(doc_schema: T.StructType) -> T.StructType:
-    """Decoded (plain-typed) envelope: meta + data."""
-    return T.StructType(
-        [
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("_id", T.StringType()),
-                        T.StructField("ts", TS_TYPE),
-                        T.StructField("ns", T.StringType()),
-                        T.StructField("op", T.StringType()),
-                        T.StructField(
-                            "updates",
-                            T.StructType(
-                                [
-                                    T.StructField("removed", T.ArrayType(T.StringType())),
-                                    T.StructField(
-                                        "changed", T.MapType(T.StringType(), T.StringType())
-                                    ),
-                                ]
-                            ),
-                        ),
-                    ]
-                ),
-            ),
-            T.StructField("data", doc_schema),
-        ]
-    )
-
-
-def _envelope_wire_schema(doc_schema: T.StructType) -> T.StructType:
-    """Tagged schema of the canonical-ext-JSON envelope on the wire.
-    meta.ts is `{"$timestamp":{t,i}}`; data fields carry type tags."""
-    return T.StructType(
-        [
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField("_id", T.StringType()),
-                        T.StructField(
-                            "ts",
-                            T.StructType([T.StructField("$timestamp", TS_TYPE)]),
-                        ),
-                        T.StructField("ns", T.StringType()),
-                        T.StructField("op", T.StringType()),
-                        T.StructField(
-                            "updates",
-                            T.StructType(
-                                [
-                                    T.StructField("removed", T.ArrayType(T.StringType())),
-                                    T.StructField(
-                                        "changed", T.MapType(T.StringType(), T.StringType())
-                                    ),
-                                ]
-                            ),
-                        ),
-                    ]
-                ),
-            ),
-            T.StructField("data", ext_json_tagged_schema(doc_schema)),
-        ]
-    )
-
-
-def decode_envelope(value_col: Column, doc_schema: T.StructType) -> Column:
-    """Kafka record value (ext-JSON bytes) -> plain-typed envelope struct
-    (message-format=json-ext, the default — route81.go:291-292)."""
-    wire = _envelope_wire_schema(doc_schema)
-    parsed = F.from_json(value_col.cast("string"), wire)
-    meta = parsed.getField("meta")
-    plain_meta = F.struct(
-        meta.getField("_id").alias("_id"),
-        meta.getField("ts").getField("$timestamp").alias("ts"),
-        meta.getField("ns").alias("ns"),
-        meta.getField("op").alias("op"),
-        meta.getField("updates").alias("updates"),
-    )
-    plain_data = strip_ext_json(parsed.getField("data"), doc_schema)
-    return F.struct(plain_meta.alias("meta"), plain_data.alias("data"))

@@ -165,30 +165,6 @@ def test_ext_json_binary_and_timestamp(spark):
     assert v["d"] == {"$date": {"$numberLong": "1560738470080"}}
 
 
-def test_passthrough_envelope_schemaless(spark):
-    """Unknown documents ride through as opaque JSON (SURVEY §1.1-2
-    option b): nothing parses the payload, deletes drop the data key."""
-    from route81_spark.envelope import build_envelope_passthrough
-
-    df = spark.createDataFrame(
-        [
-            Row(_id="a", op="i", ts=Row(t=9, i=1),
-                doc_json='{"weird":{"$numberDecimal":"1.23"},"deep":[{"x":1}]}'),
-            Row(_id="b", op="d", ts=Row(t=9, i=2), doc_json=None),
-        ],
-        "_id string, op string, ts struct<t:long,i:long>, doc_json string",
-    )
-    env = build_envelope_passthrough(df, "db.c", op_col="op", ts_col="ts")
-    got = {json.loads(bytes(r["value"]).decode())["meta"]["_id"]: r for r in env.collect()}
-    va = json.loads(bytes(got["a"]["value"]).decode())
-    # exotic BSON types round-trip untouched (SURVEY §1.2: Decimal128
-    # rides through as tagged ext-JSON)
-    assert va["data"]["weird"] == {"$numberDecimal": "1.23"}
-    assert va["meta"]["op"] == "i" and va["meta"]["ts"] == {"$timestamp": {"t": 9, "i": 1}}
-    vb = json.loads(bytes(got["b"]["value"]).decode())
-    assert "data" not in vb and vb["meta"]["op"] == "d"
-
-
 def test_synthetic_id(spark, sf_dir):
     df = with_synthetic_id(
         spark.read.parquet(f"{sf_dir}/lineitem.parquet"), "l_orderkey", "l_linenumber"

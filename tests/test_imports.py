@@ -13,7 +13,14 @@ REPO = Path(__file__).resolve().parent.parent
 
 
 @pytest.mark.parametrize(
-    "module", ["route81_spark.jobs", "route81_spark.pipeline", "route81_spark.main"]
+    "module",
+    [
+        "route81_spark.jobs",
+        "route81_spark.pipeline",
+        "route81_spark.main",
+        "route81_spark.envelope",
+        "route81_spark.jobs.consumer",
+    ],
 )
 def test_module_imports_first_in_clean_interpreter(module):
     proc = subprocess.run(

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from route81_spark.config import load_config
@@ -446,3 +447,48 @@ def test_consumer_stream_jobs_per_delta_batch(spark, tmp_path):
     assert delta and compacting, (delta, compacting)
     assert set(delta) == {1}, delta
     assert max(compacting) <= 6, compacting
+
+
+def _perf_doc_schema():
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [
+            T.StructField("_id", T.StringType()),
+            T.StructField("k", T.LongType()),
+            T.StructField("name", T.StringType()),
+            T.StructField("score", T.DoubleType()),
+            T.StructField("qty", T.IntegerType()),
+            T.StructField("active", T.BooleanType()),
+            T.StructField("note", T.StringType()),
+        ]
+    )
+
+
+@pytest.mark.parametrize("message_format", ["json-ext", "json"])
+def test_decode_classify_parses_each_message_once(spark, tmp_path, message_format):
+    """The executed decode -> classify plan holds one from_json per
+    message. Extractions under CASE WHEN (tag stripping, the
+    classifier's delete test) are not merged by subexpression
+    elimination, so a parse inlined into them runs once per field."""
+    from route81_spark.config import ConsumerSpec
+    from route81_spark.jobs.consumer import decode_classify
+
+    # a file scan, not a local relation: the optimizer folds a local
+    # relation's projections away before the plan is executed
+    path = str(tmp_path / "records")
+    spark.createDataFrame(
+        [Row(value=b'{"meta":{"_id":"a","ns":"db.c","op":"i"},"data":{"_id":"a"}}')],
+        "value binary",
+    ).write.parquet(path)
+    spec = ConsumerSpec(
+        kafka_topics=["t"],
+        mongo_namespace="db.c",
+        message_format=message_format,
+        document_root_path="data",
+        delete_id_path="meta._id",
+    )
+    out = decode_classify(spark.read.parquet(path), spec, _perf_doc_schema())
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("from_json(") == 1, plan
+    assert out.count() == 1

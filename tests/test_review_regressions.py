@@ -93,8 +93,7 @@ def test_trim_chars(spark):
 
 
 def test_map_type_envelope_roundtrip(spark):
-    from route81_spark.envelope import build_envelope
-    from route81_spark.model.schemas import decode_envelope
+    from route81_spark.envelope import build_envelope, decode_envelope
 
     df = spark.createDataFrame(
         [Row(_id="m1", kv={"a": 1, "b": 2})],

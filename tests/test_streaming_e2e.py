@@ -214,6 +214,55 @@ def test_command_envelope_contract(spark):
     assert dropdb["topic"] == "test"  # routed by db name
 
 
+def test_command_envelope_golden_bytes(spark):
+    """Command records byte for byte: key, value, headers (ts and ns
+    only) and topic, with a topic prefix and a full-width uint32 `i`."""
+    from route81_spark.config import Config
+    from route81_spark.jobs.producer import envelope_change_stream
+
+    evs = spark.createDataFrame(
+        [
+            json.dumps(
+                {**_event("drop", "0"), "clusterTime": {"t": 1700000002, "i": 7}}
+            ),
+            json.dumps(
+                {
+                    **_event("dropDatabase", "0"),
+                    "clusterTime": {"t": 1700000003, "i": 4294967295},
+                }
+            ),
+        ],
+        "string",
+    ).select(F.from_json("value", change_event_schema(DOC_SCHEMA)).alias("e")).select("e.*")
+    recs = envelope_change_stream(evs, "test.test", Config(topic_name_prefix="pfx"))
+    assert recs.columns == ["key", "value", "headers", "topic"]
+    got = sorted(
+        (
+            bytes(r["key"]),
+            bytes(r["value"]),
+            [(h["key"], bytes(h["value"])) for h in r["headers"]],
+            r["topic"],
+        )
+        for r in recs.collect()
+    )
+    assert got == [
+        (
+            b'"test"',
+            b'{"meta":{"ts":{"$timestamp":{"t":1700000003,"i":4294967295}},'
+            b'"ns":"test.test","op":"c"}}',
+            [("ts", b'{"T":1700000003,"I":4294967295}'), ("ns", b"test.test")],
+            "pfx.test",
+        ),
+        (
+            b'"test.test"',
+            b'{"meta":{"ts":{"$timestamp":{"t":1700000002,"i":7}},'
+            b'"ns":"test.test","op":"c"}}',
+            [("ts", b'{"T":1700000002,"I":7}'), ("ns", b"test.test")],
+            "pfx.test.test",
+        ),
+    ]
+
+
 def test_namespace_filter_blocks_consumer_targets(spark):
     cfg = load_config(TOML)
     df = spark.createDataFrame(

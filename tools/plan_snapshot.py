@@ -46,6 +46,7 @@ def main() -> int:
 
     spark = get_spark("plan_snapshot", 8)
     qs = entry.queries()
+    errors = []
     with open(out_path, "w") as fh:
         for name, fn in qs.items():
             if only and name not in only:
@@ -55,8 +56,12 @@ def main() -> int:
                 plan = df._jdf.queryExecution().executedPlan().toString()
             except Exception as e:  # streaming-only etc. — record the kind
                 plan = f"<error: {type(e).__name__}>"
+                errors.append(name)
             fh.write(f"===== {name} =====\n{normalize(plan)}\n")
     print(f"wrote {out_path}")
+    # a query that fails to build on both sides of a diff stays
+    # byte-equal, so name every one
+    print(f"{len(errors)} queries recorded as <error: ...>: {' '.join(errors)}")
     return 0
 
 
