@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from route81_spark.materialize import cached
 from route81_spark.ops import text as X
 from route81_spark.ops.util import det_round_sql
 from route81_spark.pipeline import apply_pipeline
@@ -460,13 +461,12 @@ def text_vocab_coverage(spark, sf_dir):
     from route81_spark.ops.text import tokens
 
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
-    tc = (
+    # total + top-k share the term-count aggregation
+    with cached(
         docs.select(F.explode(tokens(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()  # total + top-k share the term-count aggregation
-    )
-    try:
+    ) as tc:
         # scalar total + TOP-K, never a global window: orderBy+limit is
         # TakeOrderedAndProject (k rows per partition) — a full-vocab
         # rank/cumsum window would drag millions of terms through ONE
@@ -474,8 +474,6 @@ def text_vocab_coverage(spark, sf_dir):
         # so the cached term counts are read exactly once).
         raw_total = tc.agg(F.sum("c")).first()[0]
         top = tc.orderBy(F.col("c").desc(), F.col("term").asc()).limit(32).collect()
-    finally:
-        tc.unpersist()
     schema = "rank long, term string, term_count long, coverage double"
     if raw_total is None:  # empty corpus: empty curve, like the oracle
         return spark.createDataFrame([], schema)

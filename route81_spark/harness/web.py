@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from route81_spark.materialize import pin
 from route81_spark.pipeline import apply_pipeline
 from ._shared import _W_SCHEME_RE, _W_SUFFIX_IN, _W_TRACK_RE, _docs_ids, _q, _t, _wh60, _wpick
 
@@ -576,7 +577,7 @@ def corpus_crawl_funnel(spark, sf_dir):
             )
         ).alias("__cd"),
     )
-    planted = bound.select(
+    planted = pin(bound.select(
         "doc_id",
         "url",
         F.col("__cd.c").alias("canon_url"),
@@ -585,10 +586,7 @@ def corpus_crawl_funnel(spark, sf_dir):
             _h60(F.col("__cd.d"), "tmpl") % 5 == 0,
             F.lit("template boilerplate page"),
         ).otherwise(F.col("text")).alias("text"),
-        # LAZY: the winner agg's job materializes the blocks — eager
-        # added one driver job round trip per query (interleaved A/B
-        # at sf0.1: 1.40 -> 1.08 s)
-    ).localCheckpoint(eager=False)
+    ))
     # url_dedup's (canon, min-id) winner agg, inlined over the bound
     # canon column (url_dedup would re-derive it from the url)
     winners = planted.groupBy("canon_url").agg(

@@ -67,8 +67,10 @@ def run_direct_reads(spark, cfg: Config, tables: dict, ids: dict, args) -> None:
     from dataclasses import replace
 
     from route81_spark.jobs.producer import direct_read_job
+    from route81_spark.materialize import scope
 
     ids_map = {ns: v.split(",") for ns, v in ids.items()}
+    subs = [cfg]
     if cfg.mongo_uri and len(cfg.direct_read_namespaces) > cfg.direct_read_concur:
         # reference parity (route81.go:449-450): at most
         # direct-read-concur collections scan the LIVE source cluster at
@@ -76,16 +78,14 @@ def run_direct_reads(spark, cfg: Config, tables: dict, ids: dict, args) -> None:
         # wide config cannot open every collection's cursors together.
         # Parquet stand-ins skip this: there is no source DB to protect,
         # and one unioned job lets the scheduler interleave scans.
-        all_ns = cfg.direct_read_namespaces
-        for i in range(0, len(all_ns), cfg.direct_read_concur):
-            sub = replace(
-                cfg, direct_read_namespaces=all_ns[i : i + cfg.direct_read_concur]
-            )
-            records = direct_read_job(spark, sub, tables, ids_map)
-            write_records(records, args.sink_dir, cfg)
-        return
-    records = direct_read_job(spark, cfg, tables, ids_map)
-    write_records(records, args.sink_dir, cfg)
+        all_ns, n = cfg.direct_read_namespaces, cfg.direct_read_concur
+        subs = [
+            replace(cfg, direct_read_namespaces=all_ns[i : i + n])
+            for i in range(0, len(all_ns), n)
+        ]
+    for sub in subs:
+        with scope():
+            write_records(direct_read_job(spark, sub, tables, ids_map), args.sink_dir, cfg)
 
 
 def ckpt_dir(cfg: Config, root: str, name: str) -> str:

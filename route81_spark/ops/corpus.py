@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from route81_spark.materialize import cache, cached, pin, release, scope
 from route81_spark.ops.dedup import near_dedup
 from route81_spark.ops.util import lit_string_array
 from route81_spark.ops.text import curation_gate
@@ -45,16 +46,12 @@ def curate(
         curation_gate(c, tuple(langs), min_quality, min_tokens, max_tokens)
     )
     # the funnel scans its input several times (exact-dedup agg + semi
-    # join, signature build); cache the gated rows so the three
-    # tokenizing gate expressions run once, and release the cache after
-    # near_dedup's checkpoint-materialized result no longer needs it
-    gated = gated.persist()
-    try:
+    # join, signature build): the three tokenizing gate expressions run
+    # once, and near_dedup's result is checkpoint-materialized
+    with cached(gated) as gated:
         return near_dedup(
             gated, text_col, id_col, jaccard_threshold=jaccard_threshold
         )
-    finally:
-        gated.unpersist()
 
 
 def split_hash(id_col: Column, seed: str) -> Column:
@@ -120,21 +117,13 @@ def rare_bigram_stats(
     pairs = base.select(
         F.col(id_col), F.explode(bound_grams).alias("bg")
     ).filter(F.col("bg").contains(" "))  # docs with <2 tokens emit no bigram
-    # Aggregate to per-(doc, bigram) counts FIRST — tfb is the fan-out
-    # point: the model aggregation and the scoring join both hang off
-    # it. Exchange reuse does NOT fire across those branches (the
-    # tokenize lambda's variable ids defeat canonicalization — r15
-    # verified the executed plan had 3 parquet scans and 0
-    # ReusedExchange, the same failure lm_logprob_score hit), so the
-    # same lazy per-invocation localCheckpoint truncates every
-    # consumer to the already-aggregated bigram table and the corpus
-    # is tokenized exactly once. Unigram counts then derive from the
-    # (vocab-sized) bigram model — sum of c2 over bigrams sharing w1 —
-    # and the rarity decision precomputes per bigram, so the scoring
-    # join is a single equi-join against (bg, is_rare).
-    tfb = pairs.groupBy(id_col, "bg").agg(F.count(F.lit(1)).alias("n"))
-    if not tfb.isStreaming:
-        tfb = tfb.localCheckpoint(eager=False)
+    # Aggregate to per-(doc, bigram) counts FIRST and pin them: the
+    # model aggregation and the scoring join both hang off tfb, so the
+    # corpus is tokenized exactly once. Unigram counts then derive from
+    # the (vocab-sized) bigram model — sum of c2 over bigrams sharing
+    # w1 — and the rarity decision precomputes per bigram, so the
+    # scoring join is a single equi-join against (bg, is_rare).
+    tfb = pin(pairs.groupBy(id_col, "bg").agg(F.count(F.lit(1)).alias("n")))
     w1 = F.split(F.col("bg"), " ")[0]
     model = tfb.groupBy("bg").agg(F.sum("n").alias("c2"))
     uni = (
@@ -471,9 +460,9 @@ def bpe_train_merges(
     table, and the whole merge loop iterates on THAT (the classic
     trainer's word-frequency dict, kept distributed). Per round: one
     (l, r) pair-count shuffle over vocab rows, ONE argmax row to the
-    driver, one per-row literal replace. localCheckpoint every
-    `checkpoint_every` rounds bounds lineage growth exactly like the
-    connected-components loop (dedup.py); the corpus is never
+    driver, one per-row literal replace. A pin every
+    `checkpoint_every` rounds bounds lineage growth (materialize.py),
+    and every round's table is released at return; the corpus is never
     collected and nothing corpus-sized ever reaches the driver.
     `max_words` caps the iterated table to the top-V words by
     (frequency desc, word asc) — the standard trainer prune when the
@@ -503,16 +492,16 @@ def bpe_train_merges(
             .filter(F.col("__r") <= max_words)
             .drop("__r")
         )
-    words = words.select(wrapped.alias("w"), "f").persist()
     spark = df.sparkSession
     merges: list[tuple[int, str, str, int]] = []
-    prev = words
-    # one generation older than `prev` — released only AFTER the next
-    # round's argmax has materialized prev's cache (unpersisting the
-    # parent before the child is materialized would force the child's
-    # first action to re-run the whole lineage from the corpus)
-    release = None
-    try:
+    with scope():
+        words = cache(words.select(wrapped.alias("w"), "f"))
+        prev = words
+        # one generation older than `prev` — released only AFTER the next
+        # round's argmax has materialized prev (releasing the parent
+        # before the child is materialized would force the child's first
+        # action to re-run the whole lineage from the corpus)
+        older = None
         for step in range(1, n_merges + 1):
             syms = F.split(
                 F.col("w").substr(F.lit(2), F.length("w") - 2), f"{_BPE_E}{_BPE_S}"
@@ -539,11 +528,10 @@ def bpe_train_merges(
                 .limit(1)
                 .collect()
             )
-            # the argmax collect above materialized prev's cache (its
-            # parent was still cached), so the grandparent can go now
-            if release is not None:
-                release.unpersist()
-                release = None
+            # the argmax collect above materialized prev (its parent was
+            # still materialized), so the grandparent can go now
+            if older is not None:
+                release(older)
             if not best:
                 break
             l, r, cnt = best[0]["l"], best[0]["r"], best[0]["cnt"]
@@ -561,31 +549,13 @@ def bpe_train_merges(
                 ).alias("w"),
                 "f",
             )
-            if step % checkpoint_every == 0:
-                # LAZY checkpoint: the NEXT round's argmax materializes
-                # the blocks in the job it already runs — the eager
-                # form paid one extra driver job round trip per
-                # checkpoint round (interleaved A/B at sf0.1: merges
-                # 2.69 -> 2.50 s, encode 3.01 -> 2.87 s). prev stays
-                # cached until that materialization (the `release`
-                # hand-off below), so nothing recomputes.
-                nxt = nxt.localCheckpoint(eager=False)
-                if prev is not words:
-                    release = prev
-            else:
-                # lazy persist: the NEXT round's argmax materializes it
-                # in the same job it already runs — the former eager
-                # count() here was one extra job per round
-                nxt = nxt.persist()
-                if prev is not words:
-                    release = prev
+            # the NEXT round's argmax materializes nxt in the job it
+            # already runs; every `checkpoint_every` rounds the pin
+            # also cuts the lineage
+            nxt = pin(nxt) if step % checkpoint_every == 0 else cache(nxt)
+            if prev is not words:
+                older = prev
             prev = nxt
-    finally:
-        words.unpersist()
-        if prev is not words:
-            prev.unpersist()
-        if release is not None and release is not prev:
-            release.unpersist()
     return spark.createDataFrame(
         merges, "step int, sym_l string, sym_r string, pair_count long"
     )
@@ -618,7 +588,7 @@ def bpe_encode(
       corpus token, so encoding moves to the VOCAB: distinct words
       (one integer-cheap word shuffle, hapax-bounded like
       bpe_train_merges' word table) run the chain in `segment`-sized
-      slices with a localCheckpoint barrier between slices (Catalyst's
+      slices with a pin barrier between slices (Catalyst's
       project-collapse would otherwise re-inline the slices into one
       giant expression), and the resulting word->symbols map joins
       back BROADCAST — the corpus-sized side never shuffles. Chain
@@ -672,7 +642,7 @@ def bpe_encode(
             # barrier between slices: cuts the expression tree (and the
             # lineage) at vocab-sized cost; without it ProjectCollapse
             # re-inlines everything into one giant projection
-            enc = enc.localCheckpoint(eager=False)
+            enc = pin(enc)
         mapping = enc.select("word", unwrap(F.col("__w")).alias("__syms"))
         encoded = words.join(F.broadcast(mapping), "word").select(
             id_col,
@@ -782,21 +752,10 @@ def lm_logprob_score(
 
     if train_on is None:
         pairs = _bigram_pairs(df, text_col, id_col)
-        tfb = pairs.groupBy(id_col, "bg").agg(F.count(F.lit(1)).alias("n"))
-        if not tfb.isStreaming:
-            # the (id, bigram, n) relation is the fan-out point: the
-            # scoring join AND the whole model chain (c2 counts ->
-            # continuation counts -> V -> lp) hang off it, and Spark
-            # does not reuse the exchange across those branches (the
-            # tokenize lambda's variable ids defeat canonicalization) —
-            # unpinned, the corpus was scanned and tokenized FOUR
-            # times per score. localCheckpoint is per-invocation (no
-            # cross-run reuse) and truncates every consumer's replay
-            # to the already-aggregated bigram table. LAZY: the first
-            # consumer's job materializes the blocks — eager added one
-            # driver job round trip per score (interleaved A/B at
-            # sf0.1: ccnet 2.02 -> 1.55 s with the lazy form).
-            tfb = tfb.localCheckpoint(eager=False)
+        # fan-out: the scoring join AND the whole model chain (c2
+        # counts -> continuation counts -> V -> lp) read (id, bigram, n);
+        # unpinned, the corpus was tokenized four times per score
+        tfb = pin(pairs.groupBy(id_col, "bg").agg(F.count(F.lit(1)).alias("n")))
         lp, _, _ = _lm_tables(tfb.groupBy("bg").agg(F.sum("n").alias("c2")))
         # self-trained: every scored bigram is in the model, so a plain
         # inner join scores everything — no smoothing fallback needed
@@ -1565,19 +1524,9 @@ def _hashed_bigram_buckets(
         .groupBy(id_col, "__tgt", "b")
         .agg(F.count(F.lit(1)).alias("n_db"))
     )
-    if not out.isStreaming:
-        # fan-out point: both consumers (the bucket-model aggregation
-        # and the scoring join) replay this subtree, and the tokenize
-        # lambda's variable ids defeat exchange-reuse canonicalization
-        # — unpinned, the corpus is scanned and tokenized twice per
-        # DSIR/classifier query. localCheckpoint is per-invocation (no
-        # cross-run reuse) and bounds the replay at n_buckets rows per
-        # doc. LAZY: the first consumer's job materializes the blocks
-        # — eager added one driver job round trip per query
-        # (interleaved A/B at sf0.1: quality 1.79 -> 1.38 s,
-        # budget_select 1.59 -> 1.37 s).
-        out = out.localCheckpoint(eager=False)
-    return out
+    # fan-out: the bucket-model aggregation and the scoring join both
+    # read it; the pin bounds their replay at n_buckets rows per doc
+    return pin(out)
 
 
 def quality_classifier(
@@ -2440,20 +2389,14 @@ def kmv_overlap_sketch(
             .orderBy("h")
             .limit(k)
         )
-        # each sketch is a <= k-row bounded model artifact consumed by
-        # THREE downstream branches (union sketch, intersection, its
-        # own count) — unpinned, every branch replayed the corpus-wide
-        # distinct+top-k (12 parquet scans in the executed plan). The
-        # lazy localCheckpoint is per-invocation and truncates every
-        # consumer to the k rows (interleaved A/B at sf0.1, min of 6:
-        # 0.86 -> 0.78 s; the win is the removed corpus passes).
-        return s.localCheckpoint(eager=False) if not s.isStreaming else s
+        # fan-out: each <= k-row sketch feeds three branches (union
+        # sketch, intersection, its own count); unpinned, every branch
+        # replayed the corpus-wide distinct+top-k
+        return pin(s)
 
     ak, bk = sk(a), sk(b)
-    u = ak.union(bk).distinct().orderBy("h").limit(k)
-    if not u.isStreaming:
-        # same fan-out: u feeds the union-stats agg AND the shared join
-        u = u.localCheckpoint(eager=False)
+    # same fan-out: u feeds the union-stats agg AND the shared join
+    u = pin(ak.union(bk).distinct().orderBy("h").limit(k))
     inter = ak.join(bk, "h")
     shared = u.join(inter, "h")
     row = (
@@ -2759,16 +2702,9 @@ def zipf_fit(
         .groupBy("tok")
         .agg(F.count("*").alias("cnt"))
     )
-    if not c.isStreaming:
-        # the frequency table is the fan-out point: the totals agg AND
-        # the top-V TakeOrdered both hang off it, and the tokenize
-        # lambda's variable ids defeat exchange-reuse canonicalization
-        # — unpinned, the corpus was scanned and tokenized twice per
-        # fit. localCheckpoint is per-invocation (no cross-run reuse)
-        # and truncates both consumers to the vocab-sized table; lazy,
-        # so the first consumer's job materializes the blocks (an
-        # eager checkpoint adds a driver round trip per fit).
-        c = c.localCheckpoint(eager=False)
+    # fan-out: the totals agg AND the top-V TakeOrdered read the
+    # vocab-sized frequency table
+    c = pin(c)
     totals = c.agg(
         F.count("*").cast("long").alias("n_types"),
         F.sum("cnt").cast("long").alias("n_tokens"),
@@ -2940,19 +2876,9 @@ def distribution_drift(
         F.coalesce("ca", F.lit(0)).alias("ca"),
         F.coalesce("cb", F.lit(0)).alias("cb"),
     )
-    if not j.isStreaming:
-        # the joined count table is the fan-out point: the totals agg
-        # AND the TV-numerator agg (which also replays the totals as
-        # its broadcast side) hang off it, and the tokenize lambdas'
-        # variable ids defeat exchange-reuse canonicalization —
-        # unpinned, each side's corpus was scanned and tokenized up to
-        # three times per drift report (9 scans in the executed plan).
-        # localCheckpoint is per-invocation (no cross-run reuse) and
-        # truncates every consumer to the vocab-sized joined table.
-        # LAZY (eager=False): the first consumer's job materializes the
-        # blocks — an eager checkpoint added one extra driver round
-        # trip per report (measured 0.92 vs 0.71 s at sf0.1).
-        j = j.localCheckpoint(eager=False)
+    # fan-out: the totals agg AND the TV-numerator agg (which replays
+    # the totals as its broadcast side) read the joined count table
+    j = pin(j)
     agg = j.agg(
         F.count("*").cast("int").alias("n_types_union"),
         F.sum("ca").cast("long").alias("n_tokens_a"),

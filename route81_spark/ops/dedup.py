@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from route81_spark.materialize import cache, cached, checkpoint, scope
 from route81_spark.ops.text import shingles, tokens
 from route81_spark.ops.util import det_round as _det_round
 
@@ -202,15 +203,11 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     threshold: float = 0.0,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Score candidate pairs with exact shingle-set Jaccard. `pairs` has
     (id_a, id_b); the doc table joins in twice (broadcast when small).
 
-    DataFrames persisted internally are appended to `cache_registry`
-    (when given) so a composing caller — near_dedup — can unpersist
-    them once the result is materialized; ad-hoc callers accept the
-    session-lifetime cache (documented contract)."""
+    The caller's `materialize.scope()` releases its two caches."""
     # the pairs DataFrame is consumed three times below (two id
     # projections + the scoring join); without persistence the whole
     # LSH candidate DAG — the expensive part — re-executes each time.
@@ -219,9 +216,7 @@ def ngram_jaccard_pairs(
     from pyspark import StorageLevel
 
     if pairs.storageLevel == StorageLevel.NONE:
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_registry is not None:
-            cache_registry.append(pairs)
+        pairs = cache(pairs, StorageLevel.MEMORY_AND_DISK)
     # compute shingles only for documents that appear in a candidate pair
     # (left-semi prune): at 100 TB the candidate set is orders of
     # magnitude smaller than the corpus
@@ -235,11 +230,9 @@ def ngram_jaccard_pairs(
     # keys, so without a cache the shingling of the needed docs runs
     # twice (no ReusedExchange across renamed plans). Bounded by the
     # candidate set.
-    sh = needed.select(
+    sh = cache(needed.select(
         F.col(id_col), F.array_sort(shingles(F.col(text_col), shingle_n)).alias("sh")
-    ).persist()
-    if cache_registry is not None:
-        cache_registry.append(sh)
+    ))
     out = (
         pairs.join(sh.withColumnRenamed(id_col, "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
         .join(sh.withColumnRenamed(id_col, "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
@@ -319,31 +312,17 @@ def near_dedup(
     clusters = connected components of the (tiny) verified-pair graph;
     final filter = broadcast anti-join of the loser set.
 
-    `checkpoint_dir` selects reliable (HDFS/disk-file) checkpoints for
-    the cluster loop — set it on a real cluster so an executor loss
-    mid-computation cannot lose blocks; localCheckpoint (executor-local,
-    faster) remains the local-mode default.
-
-    Caching contract: intermediates persisted during the call are
-    unpersisted before returning — nothing stays explicitly cached in
-    the session. The returned DataFrame is checkpoint-materialized
-    (files under `checkpoint_dir`, or executor-local blocks by default)
-    so downstream actions re-read the result instead of re-running the
-    funnel."""
+    Everything materialized on the way is released before the call
+    returns. The result is checkpointed (`materialize.checkpoint`, with
+    `checkpoint_dir` for the cluster loop and the result alike), so
+    downstream actions re-read it instead of re-running the funnel."""
     # survivors feeds three consumers (candidate gen, Jaccard verify,
     # the final anti-join) — persist or the exact-dedup agg runs 3x
     # during the eager clustering below
-    survivors = exact_dedup(df, text_col, id_col).persist()
-    caches: list = []
-    try:
+    with cached(exact_dedup(df, text_col, id_col)) as survivors, scope() as s:
         cand = lsh_candidates(survivors, text_col, id_col, k=k, bands=bands)
         verified = ngram_jaccard_pairs(
-            survivors,
-            cand,
-            text_col,
-            id_col,
-            threshold=jaccard_threshold,
-            cache_registry=caches,
+            survivors, cand, text_col, id_col, threshold=jaccard_threshold
         )
         # eager: near_dup_clusters materializes the pair graph + labels,
         # so after this line the candidate/verify lineage is consumed
@@ -356,28 +335,8 @@ def near_dedup(
         result = survivors.join(F.broadcast(losers), id_col, "left_anti")
         # materialize while survivors is still cached: the caller's
         # actions then read the checkpointed result instead of paying
-        # the gate+exact-dedup scans again after the unpersist below
-        return _checkpointer(result, checkpoint_dir)(result)
-    finally:
-        # release every explicit cache (candidate pairs + shingle sets
-        # registered by ngram_jaccard_pairs) — a long-lived session must
-        # not leak blocks per call
-        survivors.unpersist()
-        for c in caches:
-            c.unpersist()
-
-
-def _checkpointer(df_or_spark, checkpoint_dir: str | None):
-    """Checkpoint strategy for iterative loops. localCheckpoint blocks
-    are executor-local — fast, but one lost executor mid-loop fails the
-    job, so on a real cluster (where executor loss is expected at 100x
-    scale) pass `checkpoint_dir`: reliable file-backed checkpoints
-    survive executor loss and leave nothing pinned in executor memory."""
-    if checkpoint_dir:
-        spark = getattr(df_or_spark, "sparkSession", df_or_spark)
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        return lambda df: df.checkpoint(eager=True)
-    return lambda df: df.localCheckpoint(eager=True)
+        # the gate+exact-dedup scans again after the release
+        return s.keep(checkpoint(result, checkpoint_dir))
 
 
 def _symmetric(e: DataFrame) -> DataFrame:
@@ -409,7 +368,7 @@ def _star_step(sym: DataFrame, large: bool) -> DataFrame:
     )
 
 
-def _star_components(edges: DataFrame, ck, max_rounds: int = 64) -> DataFrame:
+def _star_components(edges: DataFrame, checkpoint_dir: str | None, max_rounds=64) -> DataFrame:
     """Connected components via alternating large-star/small-star:
     O(log^2 n) rounds regardless of component *diameter*, so a deep
     chain costs no more rounds than a shallow tree. Returns (id, label)
@@ -426,7 +385,7 @@ def _star_components(edges: DataFrame, ck, max_rounds: int = 64) -> DataFrame:
         # large-star output in both edge directions through one reused
         # shuffle, so a lineage cut in between would only add a job
         large = _star_step(_symmetric(edges), large=True)
-        edges = ck(_star_step(_symmetric(large), large=False))
+        edges = checkpoint(_star_step(_symmetric(large), large=False), checkpoint_dir)
         sig = tuple(
             edges.agg(
                 F.count(F.lit(1)),
@@ -474,10 +433,7 @@ def dedup_against(
     the index side's signatures can be precomputed/stored — the band
     join only carries (id, band hash) rows either way.
 
-    Caching contract: the candidate set persists for the session (it
-    feeds three consumers in the returned lazy plan) — same documented
-    trade as ngram_jaccard_pairs' ad-hoc path; compose through
-    near_dedup-style wrappers if per-call cache release matters."""
+    The caller's `materialize.scope()` releases the candidate cache."""
     nh = new.withColumn("__ch", content_hash(F.col(text_col)))
     ih = index.select(content_hash(F.col(text_col)).alias("__ch")).distinct()
     survivors = nh.join(ih, "__ch", "left_anti").drop("__ch")
@@ -500,12 +456,11 @@ def dedup_against(
             F.posexplode(F.array(*bhs)).alias("band_idx", "band_hash"),
         )
 
-    cand = (
+    cand = cache(
         banded(survivors, "id_a")
         .join(banded(index, "id_b"), ["band_idx", "band_hash"])
         .select("id_a", "id_b")
         .distinct()
-        .persist()
     )
 
     def shingle_side(df: DataFrame, ids_col: str, sh_alias: str) -> DataFrame:
@@ -592,40 +547,33 @@ def near_dup_clusters(pairs: DataFrame, checkpoint_dir: str | None = None) -> Da
     past the threshold and takes the distributed path, so there is no
     scale cliff.
 
-    `checkpoint_dir` switches the per-round lineage truncation from
-    localCheckpoint (executor-local blocks, local-mode default) to
-    reliable file checkpoints — required on a real cluster, where an
-    executor lost mid-loop must not lose the only copy of a block."""
+    `checkpoint_dir`: see `materialize.checkpoint`."""
     # persist BEFORE the path decision: both the size count and (on
     # large graphs) the distributed loop read the cached edge set, so
     # the expensive upstream candidate/verify lineage executes exactly
     # once regardless of which path wins
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).persist()
-    # Size the graph with ONE aggregation job, then collect from the
-    # cache only when it is provably small. A `.limit(N+1).collect()`
-    # probe runs Spark's incremental CollectLimit — up to ~20 scale-up
-    # attempt jobs per call (r14 job trace: 21 jobs, ~2.5 s of pure
-    # scheduling at sf0.1). The count is the RAW pair row count:
-    # union-find is idempotent under duplicate edges, and a raw count >=
-    # the distinct count only sends a borderline graph to the
-    # distributed path, which computes the same labels.
-    n_raw = edges.count()
-    if n_raw <= SMALL_GRAPH_MAX_EDGES:
-        probe = edges.collect()
-        edges.unpersist()
-        return _collected_components(pairs, probe)
-    ck = _checkpointer(pairs, checkpoint_dir)
-    # Right-size the loop's parallelism to the PAIR GRAPH, not the
-    # corpus: running each round's tiny shuffles through corpus-sized
-    # task counts makes per-round scheduling the dominant cost (~1
-    # partition per 250k pair rows). The checkpoint reads the persisted
-    # edges, so the upstream DAG never re-executes.
-    parts = max(2, min(32, n_raw // 250_000 + 1))
-    edges_ck = ck(edges.coalesce(parts))
-    edges.unpersist()
-    labels = _star_components(edges_ck, ck)
+    with cached(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    ) as edges:
+        # Size the graph with ONE aggregation job, then collect from the
+        # cache only when it is provably small. A `.limit(N+1).collect()`
+        # probe runs Spark's incremental CollectLimit — up to ~20
+        # scale-up attempt jobs per call (r14 job trace: 21 jobs, ~2.5 s
+        # of pure scheduling at sf0.1). The count is the RAW pair row
+        # count: union-find is idempotent under duplicate edges, and a
+        # raw count >= the distinct count only sends a borderline graph
+        # to the distributed path, which computes the same labels.
+        n_raw = edges.count()
+        if n_raw <= SMALL_GRAPH_MAX_EDGES:
+            return _collected_components(pairs, edges.collect())
+        # Right-size the loop's parallelism to the PAIR GRAPH, not the
+        # corpus: running each round's tiny shuffles through corpus-sized
+        # task counts makes per-round scheduling the dominant cost (~1
+        # partition per 250k pair rows). The checkpoint reads the
+        # persisted edges, so the upstream DAG never re-executes.
+        parts = max(2, min(32, n_raw // 250_000 + 1))
+        edges_ck = checkpoint(edges.coalesce(parts), checkpoint_dir)
+    labels = _star_components(edges_ck, checkpoint_dir)
     return labels.select(F.col("id").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from route81_spark.materialize import cached
 from route81_spark.ops.dedup import content_hash
 
 STATS_OUT_SCHEMA = "key string, n long, total double, vmin double, vmax double"
@@ -397,9 +398,8 @@ def bloom_intake(
     def run_batch(batch_df: DataFrame, batch_id: int) -> None:
         words = _latest_state(int(batch_id))
         # two actions read this batch (scrub write + delta build):
-        # persist so the source files scan/tokenize once, not twice
-        batch_df = batch_df.persist()
-        try:
+        # cache so the source files scan/tokenize once, not twice
+        with cached(batch_df) as batch_df:
             accepted = bloom_apply(
                 batch_df, [int(w) for w in words], text_col, id_col,
                 sep=sep, window=window, k=k, seed=seed,
@@ -411,8 +411,6 @@ def bloom_intake(
                 batch_df, text_col, id_col, sep=sep, window=window,
                 m_bits=m_bits, k=k, seed=seed,
             ).collect()
-        finally:
-            batch_df.unpersist()
         for row in delta:
             words[int(row["word"])] |= np.int64(row["bits"])
         tmp = os.path.join(state_dir, f".words_{int(batch_id)}.tmp.npy")

@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from route81_spark.materialize import cache, scope
+
 
 def _as_seconds(c: Column, dtype: T.DataType) -> Column:
     """Epoch seconds (double) from a timestamp/ntz/numeric column.
@@ -400,11 +402,11 @@ def _reach_levels(
     ts_col: str,
     user_col: str,
 ) -> list:
-    """Shared funnel machinery: per step, the PERSISTED user-level
+    """Shared funnel machinery: per step, the CACHED user-level
     (user, __t) table of reach times — step i's reach is the earliest
-    step-i event at-or-after the step-(i-1) reach. Persisting each
-    (tiny) level keeps the event log scanned once per step instead of
-    O(k^2). Caller MUST unpersist every returned level."""
+    step-i event at-or-after the step-(i-1) reach. Caching each (tiny)
+    level keeps the event log scanned once per step instead of O(k^2);
+    the caller's `materialize.scope()` releases the levels."""
     reach = None
     levels: list = []
     for step in steps:
@@ -420,7 +422,7 @@ def _reach_levels(
                 .groupBy(user_col)
                 .agg(F.min("__ts").alias("__t"))
             )
-        reach = reach.persist()
+        reach = cache(reach)
         levels.append(reach)
     return levels
 
@@ -473,9 +475,9 @@ def funnel_counts(
     self-joins at event granularity."""
     if not steps:
         raise ValueError("funnel_counts needs at least one step")
-    levels = _reach_levels(df, steps, step_col, ts_col, user_col)
-    try:
-        # ONE job for all steps: tag each (persisted, user-level) level
+    with scope():
+        levels = _reach_levels(df, steps, step_col, ts_col, user_col)
+        # ONE job for all steps: tag each (cached, user-level) level
         # with its step index, union, and count per tag — k sequential
         # .count() actions would pay scheduler overhead per funnel step
         tagged = None
@@ -488,9 +490,6 @@ def funnel_counts(
             .agg(F.count(F.lit(1)).alias("n_users"))
             .collect()
         }
-    finally:
-        for lvl in levels:
-            lvl.unpersist()
     counts = [
         (i + 1, str(step), int(got.get(i + 1, 0)))
         for i, step in enumerate(steps)
@@ -622,8 +621,8 @@ def funnel_latency(
         raise ValueError("funnel_latency needs at least two steps")
     from route81_spark.ops.util import det_round
 
-    levels = _reach_levels(df, steps, step_col, ts_col, user_col)
-    try:
+    with scope():
+        levels = _reach_levels(df, steps, step_col, ts_col, user_col)
         # ONE job for all transitions: tag each per-transition delta
         # table with its step index, union, aggregate per tag — the
         # per-step .first() loop ran one Spark job per funnel step
@@ -650,9 +649,6 @@ def funnel_latency(
             )
             .collect()
         }
-    finally:
-        for lvl in levels:
-            lvl.unpersist()
     rows = []
     for i, step in enumerate(steps[1:], start=1):
         agg = got.get(i + 1)

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from route81_spark.materialize import checkpoint
 from route81_spark.pipeline.exprs import PipelineCompileError, compile_expr
 from route81_spark.pipeline.query import compile_match
 
@@ -657,11 +658,11 @@ def _stage_graph_lookup(df: DataFrame, arg: dict) -> DataFrame:
     )
 
     start = df.select(compile_expr(arg["startWith"], df).alias("__start")).distinct()
-    # localCheckpoint each round's frontier: the emptiness probe is a
-    # job per round, and without lineage truncation round k would
-    # re-execute rounds 1..k-1 (plan growth is exponential in depth).
-    # Frontiers are (start, value) pairs — tiny relative to the corpus.
-    frontier = start.select("__start", F.col("__start").alias("__val")).localCheckpoint()
+    # checkpoint each round's frontier: the emptiness probe is a job
+    # per round, and without lineage truncation round k would re-execute
+    # rounds 1..k-1 (plan growth is exponential in depth). Frontiers are
+    # (start, value) pairs — tiny relative to the corpus.
+    frontier = checkpoint(start.select("__start", F.col("__start").alias("__val")))
     doc_struct = F.struct(*[F.col(f"__f_{c}").alias(c) for c in fcols])
     visited_parts: list[DataFrame] = []  # (__start, __doc, __depth) per round
     expanded = frontier  # (start, val) pairs already used as a frontier
@@ -678,7 +679,7 @@ def _stage_graph_lookup(df: DataFrame, arg: dict) -> DataFrame:
         if depth == max_depth:
             break
         nxt = hits.select("__start", F.col("__next").alias("__val")).distinct()
-        frontier = nxt.join(expanded, ["__start", "__val"], "left_anti").localCheckpoint()
+        frontier = checkpoint(nxt.join(expanded, ["__start", "__val"], "left_anti"))
         if frontier.limit(1).count() == 0:
             break
         expanded = expanded.unionByName(frontier)

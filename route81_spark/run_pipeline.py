@@ -111,29 +111,28 @@ def main(argv: list[str] | None = None) -> int:
             raise SystemExit(f"bad --tables entry (want name=path): {spec!r}")
         tables[name] = path
 
+    from route81_spark.materialize import cached, scope
     from route81_spark.session import get_spark
 
     spark = get_spark("route81_spark_run_pipeline")
-    out = run(
-        spark, pipeline, args.source, tables,
-        collections_dir=args.write_collections,
-    )
-    if args.out:
-        # observe() rides the write job — no second pass over the result
-        from pyspark.sql import Observation
+    with scope():
+        out = run(
+            spark, pipeline, args.source, tables,
+            collections_dir=args.write_collections,
+        )
+        if args.out:
+            # observe() rides the write job — no second pass over the result
+            from pyspark.sql import Observation
 
-        obs = Observation("run_pipeline")
-        out.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-            "overwrite"
-        ).parquet(args.out)
-        print(json.dumps({"rows": int(obs.get["rows"]), "out": args.out}))
-    else:
-        out = out.persist()  # show + count share one execution
-        try:
-            out.show(args.show, truncate=False)
-            print(json.dumps({"rows": out.count()}))
-        finally:
-            out.unpersist()
+            obs = Observation("run_pipeline")
+            out.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                "overwrite"
+            ).parquet(args.out)
+            print(json.dumps({"rows": int(obs.get["rows"]), "out": args.out}))
+        else:
+            with cached(out) as out:  # show + count share one execution
+                out.show(args.show, truncate=False)
+                print(json.dumps({"rows": out.count()}))
     return 0
 
 

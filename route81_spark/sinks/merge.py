@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from route81_spark.materialize import cached
+
 log = logging.getLogger("route81_spark.merge")
 
 
@@ -263,12 +265,9 @@ class KeyedParquetTable:
             # the resolve reads the batch twice (keys and rows): cache it
             # first, so the batch's own plan (and what it observes) runs
             # once, in one job
-            batch = batch.persist()
-            try:
+            with cached(batch) as batch:
                 batch.count()
                 rows = self._write(self._resolve(m, schema, batch), name)
-            finally:
-                batch.unpersist()
             log.info("compacted %s: %d delta rows into %s (%d rows)", self.path, delta_rows, name, rows)
             m = {**m, "base": name, "base_rows": rows, "deltas": []}
         else:

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from route81_spark.config import Config
+from route81_spark.materialize import cached
 
 log = logging.getLogger("route81_spark.mongo")
 
@@ -292,8 +293,7 @@ class MongoKeyedSink:
     def merge(
         self, changes: DataFrame, seq: str | None = "seq", batch_id: int | None = None, stream_id: str = ""
     ) -> None:  # pragma: no cover - live only
-        changes = changes.persist()
-        try:
+        with cached(changes) as changes:
             upserts, deletes = self.split(changes, seq)
             with_mongo_retry(
                 lambda: mongo_writer(upserts, self.cfg, self.namespace).save(),
@@ -302,8 +302,6 @@ class MongoKeyedSink:
             delete_writer(
                 self.cfg, self.namespace, bulk_size=self.bulk_size
             )(deletes)
-        finally:
-            changes.unpersist()
 
 
 def with_mongo_retry(

@@ -3096,25 +3096,20 @@ def test_kmv_overlap_sketch_bounds(spark):
     ex = kmv_overlap_sketch(small_a, small_b, k=16).collect()[0]
     assert ex["union_est"] == 3.0 and ex["k_used"] == 3 and ex["shared"] == 1
     # scale pin: the sketch is a TakeOrdered per side, never a global
-    # Sort. r15 hides the sketch lineage behind per-invocation lazy
-    # localCheckpoints (each sketch is a <= k-row bounded artifact fed
-    # to three branches; unpinned, every branch replayed the corpus
-    # pass), so (a) the consumer plan must read the checkpoints, and
-    # (b) the TakeOrdered pin is asserted on the un-checkpointed
-    # lineage via an identity patch.
+    # Sort. Each sketch is a <= k-row bounded artifact fed to three
+    # branches, so it is pinned (materialize.pin): (a) the consumer
+    # plan must read the pinned rows, and (b) the TakeOrdered pin is
+    # asserted on the unpinned lineage, with the pin patched out.
     import io
     from contextlib import redirect_stdout
 
     buf = io.StringIO()
     with redirect_stdout(buf):
         kmv_overlap_sketch(docs, other, k=16).explain(mode="simple")
-    assert "Scan ExistingRDD" in buf.getvalue()  # sketches checkpointed
+    assert "Scan ExistingRDD" in buf.getvalue()  # sketches pinned
     from unittest import mock
 
-    def identity(self, *args, **kwargs):
-        return self
-
-    with mock.patch.object(type(docs), "localCheckpoint", identity):
+    with mock.patch("route81_spark.ops.corpus.pin", lambda df: df):
         buf = io.StringIO()
         with redirect_stdout(buf):
             kmv_overlap_sketch(docs, other, k=16).explain(mode="simple")

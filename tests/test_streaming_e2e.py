@@ -263,6 +263,80 @@ def test_command_envelope_golden_bytes(spark):
     ]
 
 
+def test_document_envelope_golden_bytes(spark):
+    """Document records byte for byte: key, value, headers (ts, ns and
+    _id) and topic of an insert, an update and a delete, with a topic
+    prefix and a full-width uint32 `i`."""
+    from route81_spark.config import Config
+    from route81_spark.jobs.producer import envelope_change_stream
+
+    evs = spark.createDataFrame(
+        [
+            json.dumps(
+                {**_event("insert", "1", 1), "clusterTime": {"t": 1700000001, "i": 1}}
+            ),
+            json.dumps(
+                {
+                    **_event("update", "2", 20),
+                    "clusterTime": {"t": 1700000002, "i": 2},
+                    "updateDescription": {
+                        "updatedFields": {"i": 20},
+                        "removedFields": ["tag"],
+                    },
+                }
+            ),
+            json.dumps(
+                {
+                    **_event("delete", "3"),
+                    "clusterTime": {"t": 1700000003, "i": 4294967295},
+                }
+            ),
+        ],
+        "string",
+    ).select(F.from_json("value", change_event_schema(DOC_SCHEMA)).alias("e")).select("e.*")
+    recs = envelope_change_stream(evs, "test.test", Config(topic_name_prefix="pfx"))
+    assert recs.columns == ["key", "value", "headers", "topic"]
+    got = sorted(
+        (
+            bytes(r["key"]),
+            bytes(r["value"]),
+            [(h["key"], bytes(h["value"])) for h in r["headers"]],
+            r["topic"],
+        )
+        for r in recs.collect()
+    )
+    assert got == [
+        (
+            b'"1"',
+            b'{"meta":{"_id":"1","ts":{"$timestamp":{"t":1700000001,"i":1}},'
+            b'"ns":"test.test","op":"i"},'
+            b'"data":{"_id":"1","i":{"$numberInt":"1"},"tag":"t1"}}',
+            [("ts", b'{"T":1700000001,"I":1}'), ("ns", b"test.test"), ("_id", b'"1"')],
+            "pfx.test.test",
+        ),
+        (
+            b'"2"',
+            b'{"meta":{"_id":"2","ts":{"$timestamp":{"t":1700000002,"i":2}},'
+            b'"ns":"test.test","op":"u",'
+            b'"updates":{"removed":["tag"],"changed":{"i":"20"}}},'
+            b'"data":{"_id":"2","i":{"$numberInt":"20"},"tag":"t20"}}',
+            [("ts", b'{"T":1700000002,"I":2}'), ("ns", b"test.test"), ("_id", b'"2"')],
+            "pfx.test.test",
+        ),
+        (
+            b'"3"',
+            b'{"meta":{"_id":"3","ts":{"$timestamp":{"t":1700000003,"i":4294967295}},'
+            b'"ns":"test.test","op":"d"}}',
+            [
+                ("ts", b'{"T":1700000003,"I":4294967295}'),
+                ("ns", b"test.test"),
+                ("_id", b'"3"'),
+            ],
+            "pfx.test.test",
+        ),
+    ]
+
+
 def test_namespace_filter_blocks_consumer_targets(spark):
     cfg = load_config(TOML)
     df = spark.createDataFrame(

@@ -2,17 +2,24 @@
 queries() entry on Spark and its oracle_sql() on DuckDB over the same
 parquet tables, compare row-count + sorted-column value content.
 
+Each query is built and consumed inside one `materialize.scope()`;
+every persistent RDD or CacheManager entry left after the scope closes
+is reported as a leak and fails the run. The last line is the JVM's
+peak resident set size (VmHWM).
+
 Usage: python tools/check_correctness.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
+from collections import Counter
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -29,11 +36,32 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def held(spark) -> tuple[set, list]:
+    """Persistent-RDD ids and the CacheManager's cached plans."""
+    rdds = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+    data = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    plans = [
+        data.apply(i).plan().toString().splitlines()[0]
+        for i in range(data.size())
+    ]
+    return rdds, plans
+
+
+def jvm_peak_rss(spark) -> str:
+    pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    with open(f"/proc/{pid}/status") as fh:
+        for line in fh:
+            if line.startswith("VmHWM:"):
+                return line.split(":", 1)[1].strip()
+    return "unknown"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entry
+    from route81_spark.materialize import scope
     from route81_spark.session import get_spark
 
     qs = entry.queries()
@@ -50,17 +78,28 @@ def main() -> int:
 
     oracles = entry.oracle_sql()
     failures = []
+    leaks = []
     ran = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
         ran += 1
+        rdds0, plans0 = held(spark)
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            with scope():
+                sdf = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: spark error: {e}")
             continue
+        rdds, plans = held(spark)
+        new_plans = list((Counter(plans) - Counter(plans0)).elements())
+        if rdds - rdds0 or new_plans:
+            leaks.append(name)
+            print(
+                f"LEAK {name}: persistent RDDs {sorted(rdds - rdds0)}, "
+                f"cache entries {new_plans}"
+            )
         if name not in oracles:
             print(f"SKIP {name}: no oracle ({len(sdf)} rows)")
             continue
@@ -95,8 +134,9 @@ def main() -> int:
             failures.append(name)
             msg = str(e).splitlines()
             print(f"FAIL {name}: values differ: " + " | ".join(msg[:6]))
-    print(f"\n{ran - len(failures)}/{ran} pass")
-    return 1 if failures else 0
+    print(f"\n{ran - len(failures)}/{ran} pass, {len(leaks)} leaking: {' '.join(leaks)}")
+    print(f"jvm peak RSS (VmHWM): {jvm_peak_rss(spark)}")
+    return 1 if failures or leaks else 0
 
 
 if __name__ == "__main__":
