@@ -24,7 +24,7 @@ import logging
 import os
 import shutil
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -122,8 +122,15 @@ MANIFEST = "_manifest.json"
 def _delta_schema(doc: T.StructType) -> T.StructType:
     return (
         T.StructType().add("doc_id", "string").add("is_delete", "boolean").add("doc", doc)
-        .add("seq", "long").add("__v", "long")
+        .add("seq", "long")
     )
+
+
+def _delta_version() -> Column:
+    """A delta row's commit version, read from its `delta-NNNNNN`
+    directory name. A literal version column would be inlined into the
+    write's generated code, so each batch would compile new classes."""
+    return F.regexp_extract(F.col("_metadata.file_path"), r"/delta-(\d+)/[^/]*$", 1).cast("long")
 
 
 def _widen(schema: T.StructType, doc: T.StructType) -> T.StructType:
@@ -140,10 +147,11 @@ class KeyedParquetTable:
     foreachBatch.
 
     A merge appends its batch as a delta directory of change rows
-    (`doc_id`, `is_delete`, `doc`, `seq`, and the commit's version `__v`)
-    and commits by `os.replace` of the manifest, so its cost tracks the
-    batch, not the table: it never reads the target. `read()` resolves
-    base ∪ deltas per key by (`__v`, `seq`) with one per-key ranking
+    (`doc_id`, `is_delete`, `doc`, `seq`) named by the commit's version
+    (`delta-NNNNNN`) and commits by `os.replace` of the manifest, so its
+    cost tracks the batch, not the table: it never reads the target.
+    `read()` resolves base ∪ deltas per key by (version, `seq`), the
+    version taken from each delta's directory name, with one per-key ranking
     (`apply_changes`). Compaction follows one rule: once the committed
     delta rows pass COMPACT_FRACTION of the base rows, the next merge
     writes a new base resolved from base ∪ deltas ∪ its own batch in
@@ -157,7 +165,9 @@ class KeyedParquetTable:
     untouched; files it does not list are deleted after each commit.
 
     A directory holding a parquet snapshot in `current/` and no manifest
-    (the layout before the manifest) opens as a base with no deltas."""
+    (the layout before the manifest) opens as a base with no deltas;
+    deltas that also store their version in a `__v` column (the layout
+    before the version came from the name) open as they are."""
 
     def __init__(self, spark: SparkSession, path: str, key: str = "_id"):
         self.spark = spark
@@ -196,7 +206,7 @@ class KeyedParquetTable:
         if m["deltas"]:
             changes = self.spark.read.schema(_delta_schema(schema)).parquet(
                 *[self._file(d) for d, _ in m["deltas"]]
-            )
+            ).withColumn("__v", _delta_version())
         if batch is not None:
             changes = batch if changes is None else changes.unionByName(batch, allowMissingColumns=True)
         if changes is None:
@@ -257,7 +267,6 @@ class KeyedParquetTable:
             "is_delete",
             "doc",
             order.cast("long").alias("seq"),
-            F.lit(version).cast("long").alias("__v"),
         )
         delta_rows = sum(n for _, n in m["deltas"])
         if delta_rows > COMPACT_FRACTION * m["base_rows"]:
@@ -265,7 +274,7 @@ class KeyedParquetTable:
             # the resolve reads the batch twice (keys and rows): cache it
             # first, so the batch's own plan (and what it observes) runs
             # once, in one job
-            with cached(batch) as batch:
+            with cached(batch.withColumn("__v", F.lit(version).cast("long"))) as batch:
                 batch.count()
                 rows = self._write(self._resolve(m, schema, batch), name)
             log.info("compacted %s: %d delta rows into %s (%d rows)", self.path, delta_rows, name, rows)

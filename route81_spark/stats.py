@@ -16,6 +16,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql.streaming import StreamingQueryListener
 
+from route81_spark.session import codegen_totals
+
 
 class StatsListener(StreamingQueryListener):
     """Accumulates the observe('producer_stats', ...) metrics emitted by
@@ -135,7 +137,10 @@ def serve_stats(
     """HTTP /started /healthz /stats like route81.go:937-980, plus the
     config-gated /debug/pprof/* family (route81.go:141 `pprof` key,
     served route81.go:967-973) mapped to the Python driver: cmdline,
-    thread-stack dump, sampling CPU profile. Returns the server (already
+    thread-stack dump, sampling CPU profile. /stats serves the listener's
+    counters plus the JVM's generated-code compiles and their total
+    milliseconds (`codegen_compiles`, `codegen_compile_ms`), which keep
+    rising while repeated work is recompiled. Returns the server (already
     serving on a daemon thread); .server_port has the bound port."""
 
     class Handler(BaseHTTPRequestHandler):
@@ -148,7 +153,7 @@ def serve_stats(
             if url.path in ("/started", "/healthz"):
                 body = b"ok"
             elif url.path == "/stats":
-                body = json.dumps(listener.snapshot()).encode()
+                body = json.dumps({**listener.snapshot(), **codegen_totals()}).encode()
             elif pprof and url.path in ("/debug/pprof", "/debug/pprof/"):
                 ctype = "text/plain"
                 body = b"profiles: cmdline profile goroutine\n"

@@ -21,6 +21,7 @@ from pyspark.sql import types as T
 
 from route81_spark.config import ConsumerSpec
 from route81_spark.jobs.consumer import consumer_job
+from route81_spark.session import codegen_totals
 from route81_spark.sinks import merge as M
 from route81_spark.sinks.merge import KeyedParquetTable
 
@@ -43,12 +44,12 @@ class Consumer:
     """A target table, its model, and a consumer stream over a parquet
     topic directory that can be reopened on the same checkpoint."""
 
-    def __init__(self, spark, root) -> None:
+    def __init__(self, spark, root, seed: int = SEED) -> None:
         self.spark, self.root = spark, root
         self.path = str(root / "t")
         self.topic = root / "topic"
         self.topic.mkdir()
-        self.model = {f"k{j}": j for j in range(SEED)}
+        self.model = {f"k{j}": j for j in range(seed)}
         KeyedParquetTable(spark, self.path).init(
             spark.createDataFrame(sorted(self.model.items()), DOC)
         )
@@ -213,6 +214,26 @@ def test_new_checkpoint_is_a_new_stream(spark, tmp_path):
         c.open("ckpt2")
         c.send(2)
         c.run()
+    finally:
+        c.query.stop()
+    c.check()
+
+
+def test_steady_batch_compiles_nothing(spark, tmp_path):
+    """A consumer batch that writes a delta runs the code of the batch
+    before it: once warm, it compiles no generated class. (A version
+    literal in the delta rows compiled 2 new classes per batch.)"""
+    c = Consumer(spark, tmp_path, seed=200)  # 16 batches of 3 before a compaction
+    try:
+        for b in (0, 1, 2):
+            c.send(b)
+            c.run()
+        before = codegen_totals(spark)["codegen_compiles"]
+        c.send(3)
+        c.run()
+        assert codegen_totals(spark)["codegen_compiles"] == before
+        deltas = json.loads(open(os.path.join(c.path, M.MANIFEST)).read())["deltas"]
+        assert [d for d, _ in deltas] == [f"delta-{v:06d}" for v in (1, 2, 3, 4)]
     finally:
         c.query.stop()
     c.check()

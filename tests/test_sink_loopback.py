@@ -365,6 +365,31 @@ def test_legacy_current_table(spark, tmp_path):
     assert sorted(tuple(r) for r in reopened.read().collect()) == [("b", 20), ("c", 3)]
 
 
+def test_delta_with_stored_version(spark, tmp_path):
+    """A delta that also stores its commit version in a `__v` column
+    (the layout before the version came from the directory name) opens
+    and reads, and it orders by version against the deltas written
+    after it: a later batch wins over it with a lower seq."""
+    import json
+
+    from route81_spark.sinks.merge import MANIFEST
+
+    path = tmp_path / "t"
+    table = KeyedParquetTable(spark, str(path))
+    table.init(spark.createDataFrame([(f"k{j}", j) for j in range(10)], "_id string, i int"))
+    spark.createDataFrame(
+        [("k1", False, ("k1", 10), 5, 1), ("k2", True, None, 5, 1)],
+        "doc_id string, is_delete boolean, doc struct<_id:string,i:int>, seq long, __v long",
+    ).write.parquet(str(path / "delta-000001"))
+    m = json.loads((path / MANIFEST).read_text())
+    (path / MANIFEST).write_text(json.dumps({**m, "version": 1, "deltas": [["delta-000001", 2]]}))
+    want = {f"k{j}": j for j in range(10) if j != 2}
+    assert dict(tuple(r) for r in table.read().collect()) == {**want, "k1": 10}
+    table.merge(_keyed_changes(spark, [("k1", False, ("k1", 11), 1), ("k2", False, ("k2", 12), 1)]))
+    assert (path / "delta-000002").is_dir()
+    assert dict(tuple(r) for r in table.read().collect()) == {**want, "k1": 11, "k2": 12}
+
+
 def test_apply_changes_schema_drift(spark):
     """The reference sink is schemaless: a replace that ADDS a field
     widens the table (old rows read null); one that DROPS a field

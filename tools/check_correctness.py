@@ -5,7 +5,8 @@ parquet tables, compare row-count + sorted-column value content.
 Each query is built and consumed inside one `materialize.scope()`;
 every persistent RDD or CacheManager entry left after the scope closes
 is reported as a leak and fails the run. The last line is the JVM's
-peak resident set size (VmHWM).
+peak resident set size (VmHWM) and its generated-code compiles with
+their total time.
 
 Usage: python tools/check_correctness.py [sf_dir] [name ...]
 """
@@ -62,7 +63,7 @@ def main() -> int:
 
     import __spark_entry__ as entry
     from route81_spark.materialize import scope
-    from route81_spark.session import get_spark
+    from route81_spark.session import codegen_totals, get_spark
 
     qs = entry.queries()
     unknown = sorted(only - set(qs))
@@ -135,7 +136,11 @@ def main() -> int:
             msg = str(e).splitlines()
             print(f"FAIL {name}: values differ: " + " | ".join(msg[:6]))
     print(f"\n{ran - len(failures)}/{ran} pass, {len(leaks)} leaking: {' '.join(leaks)}")
-    print(f"jvm peak RSS (VmHWM): {jvm_peak_rss(spark)}")
+    cg = codegen_totals(spark)
+    print(
+        f"jvm peak RSS (VmHWM): {jvm_peak_rss(spark)}; codegen compiles: "
+        f"{cg['codegen_compiles']} ({cg['codegen_compile_ms']} ms)"
+    )
     return 1 if failures or leaks else 0
 
 
